@@ -29,9 +29,10 @@ from pyspark.sql import DataFrame
 _PINS: list[tuple[str, DataFrame]] = []
 
 #: byte suffixes Spark's own JavaUtils.byteStringAsBytes accepts
-_SIZE_SUFFIXES = (("tb", 1024 ** 4), ("gb", 1024 ** 3), ("mb", 1024 ** 2),
-                  ("kb", 1024), ("t", 1024 ** 4), ("g", 1024 ** 3),
-                  ("m", 1024 ** 2), ("k", 1024), ("b", 1))
+_SIZE_SUFFIXES = (("pb", 1024 ** 5), ("tb", 1024 ** 4), ("gb", 1024 ** 3),
+                  ("mb", 1024 ** 2), ("kb", 1024), ("p", 1024 ** 5),
+                  ("t", 1024 ** 4), ("g", 1024 ** 3), ("m", 1024 ** 2),
+                  ("k", 1024), ("b", 1))
 
 
 def broadcast_threshold_bytes(spark) -> int:

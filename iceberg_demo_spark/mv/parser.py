@@ -85,20 +85,31 @@ def _split_top_level(s: str, sep: str = ",") -> list[str]:
     return [p.strip() for p in out if p.strip()]
 
 
+#: a quoted string literal ('…' or "…", backslash escapes), captured so
+#: re.split keeps it
+_LITERAL_RE = re.compile(r"""('(?:[^'\\]|\\.)*'|"(?:[^"\\]|\\.)*")""")
+
+
 def normalize_expr(expr: str, aliases: dict[str, str] | None = None,
                    single_table: str | None = None) -> str:
     """Whitespace/case canonicalization + alias→table qualification; for
     single-table queries, the table qualifier is stripped entirely so that
-    ``sales.amount``, ``s.amount`` and ``amount`` all canonicalize alike."""
-    s = re.sub(r"\s+", " ", expr.strip())
-    s = re.sub(r"\s*([=<>!%*/+,()-])\s*", r"\1", s)
-    s = s.lower()
-    for a, t in (aliases or {}).items():
-        s = re.sub(rf"\b{re.escape(a.lower())}\.", f"{t.lower()}.", s)
-    if single_table:
-        s = re.sub(rf"\b{re.escape(single_table.lower())}\.", "", s)
-    s = re.sub(r"\bcount\(1\)", "count(*)", s)
-    return s
+    ``sales.amount``, ``s.amount`` and ``amount`` all canonicalize alike.
+    Quoted string literals are kept verbatim: ``'1-URGENT'`` and
+    ``'1-urgent'`` are different values."""
+
+    def canon(s: str) -> str:
+        s = re.sub(r"\s+", " ", s)
+        s = re.sub(r"\s*([=<>!%*/+,()-])\s*", r"\1", s)
+        s = s.lower()
+        for a, t in (aliases or {}).items():
+            s = re.sub(rf"\b{re.escape(a.lower())}\.", f"{t.lower()}.", s)
+        if single_table:
+            s = re.sub(rf"\b{re.escape(single_table.lower())}\.", "", s)
+        return re.sub(r"\bcount\(1\)", "count(*)", s)
+
+    parts = _LITERAL_RE.split(expr.strip())
+    return "".join(p if i % 2 else canon(p) for i, p in enumerate(parts))
 
 
 def split_conjuncts(cond: str) -> list[str]:

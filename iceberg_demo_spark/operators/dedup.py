@@ -620,11 +620,10 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     # aggregate and convergence count then plan with ZERO exchanges
     # (SinglePartition satisfies every clustered distribution); a graph
     # that outgrows the threshold keeps the distributed shape untouched
+    # (a threshold of 0 rules the collapse out, so skip the count job)
     from iceberg_demo_spark.cache import broadcast_threshold_bytes
-    n_bidir = bidir.count()
-    small = 0 < n_bidir * 64 <= broadcast_threshold_bytes(
-        edges.sparkSession)
-    if small:
+    threshold = broadcast_threshold_bytes(edges.sparkSession)
+    if threshold > 0 and 0 < bidir.count() * 64 <= threshold:
         bidir = bidir.coalesce(1)
     labels = (
         bidir.select(F.col("id_a").alias("id")).distinct()

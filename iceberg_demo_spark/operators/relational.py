@@ -765,10 +765,13 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         "new_session",
         F.when(
             F.lag("ts").over(w).isNull()
-            # double cast: TIMESTAMP_NTZ has no direct →long; the session
-            # timezone is pinned UTC so →timestamp is a reinterpretation
-            | (F.col("ts").cast("timestamp").cast("long")
-               - F.lag("ts").over(w).cast("timestamp").cast("long") > 1800),
+            # compare in microseconds, the timestamps' own precision, so a
+            # 1800.5 s gap exceeds 30 min as in the oracle; the cast
+            # handles TIMESTAMP_NTZ (the session timezone is pinned UTC,
+            # so →timestamp is a reinterpretation)
+            | (F.unix_micros(F.col("ts").cast("timestamp"))
+               - F.unix_micros(F.lag("ts").over(w).cast("timestamp"))
+               > 1800 * 1_000_000),
             1,
         ).otherwise(0),
     )

@@ -7,6 +7,12 @@ world-writable system temp dir are a squat risk on a multi-user host: a
 stale or attacker-pre-created directory with a ``_SUCCESS`` marker would
 be silently trusted. All such paths therefore live under a per-user
 subdirectory created 0o700, whose ownership is verified on every reuse.
+
+The module also holds the process's one bounded relation cache
+(``RELATION_CACHE_SIZE`` entries, least recently used evicted): source
+table schemas (:func:`source_parquet`) and index artifact handles and
+rows (:func:`cached_parquet`, :func:`cached_parquet_first`), each keyed
+by application, path and a fingerprint of the file version it came from.
 """
 
 from __future__ import annotations
@@ -14,6 +20,8 @@ from __future__ import annotations
 import os
 import stat
 import tempfile
+import threading
+from collections import OrderedDict
 
 
 def scratch_dir() -> str:
@@ -86,8 +94,66 @@ def write_index_manifest(path: str, sf_dir: str,
         json.dump(_source_fingerprint(sf_dir, tables), fh)
 
 
-#: (application id, artifact dir, manifest mtime_ns) → DataFrame handle
-_PARQUET_HANDLES: dict[tuple[str, str, int], object] = {}
+#: most entries the relation cache holds. Every entry is metadata — a
+#: schema, a DataFrame handle or one Row — so the bound caps this
+#: process's memory, never what an action scans.
+RELATION_CACHE_SIZE = 128
+
+#: (kind, application id, absolute path) → (fingerprint, value), least
+#: recently used first. One entry per key, so storing a path's new
+#: fingerprint replaces the entry of its old one.
+_RELATIONS: OrderedDict[tuple[str, str, str], tuple[object, object]] = \
+    OrderedDict()
+_RELATIONS_LOCK = threading.Lock()
+
+
+def _cached(kind: str, spark, path: str, fingerprint, make):
+    """``make()``, kept in the relation cache under (kind, application,
+    absolute path) for as long as the path's ``fingerprint`` holds."""
+    key = (kind, spark.sparkContext.applicationId, os.path.abspath(path))
+    with _RELATIONS_LOCK:
+        hit = _RELATIONS.get(key)
+        if hit is not None and hit[0] == fingerprint:
+            _RELATIONS.move_to_end(key)
+            return hit[1]
+    value = make()
+    with _RELATIONS_LOCK:
+        _RELATIONS[key] = (fingerprint, value)
+        _RELATIONS.move_to_end(key)
+        while len(_RELATIONS) > RELATION_CACHE_SIZE:
+            _RELATIONS.popitem(last=False)
+    return value
+
+
+def source_parquet(spark, path: str):
+    """A fresh relation over the parquet file at ``path``, with its
+    schema inferred once per file version.
+
+    ``spark.read.parquet`` runs one Spark job per call to infer the
+    schema from the parquet footer; for the small source tables that job
+    costs more than the query. The schema is cached per (application,
+    path, (mtime_ns, size)), so a file rewritten in place is re-inferred.
+    Only the schema is cached: every call builds a new relation and lists
+    the file again, and every action scans the data. Handing out one
+    shared DataFrame instead would make two loads of the same table share
+    attribute ids, so a self-join of them would be ambiguous. A path that
+    is not a regular file (a table directory) is read uncached."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    schema = _cached("schema", spark, path, (st.st_mtime_ns, st.st_size),
+                     lambda: spark.read.parquet(path).schema)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _manifest_mtime(root: str) -> int | None:
+    try:
+        return os.stat(os.path.join(root, _MANIFEST)).st_mtime_ns
+    except OSError:
+        return None
 
 
 def cached_parquet(spark, root: str, name: str):
@@ -107,20 +173,11 @@ def cached_parquet(spark, root: str, name: str):
     gets a fresh relation; an artifact without a manifest is read
     uncached."""
     full = os.path.join(root, name)
-    try:
-        mtime = os.stat(os.path.join(root, _MANIFEST)).st_mtime_ns
-    except OSError:
+    mtime = _manifest_mtime(root)
+    if mtime is None:
         return spark.read.parquet(full)
-    key = (spark.sparkContext.applicationId, full, mtime)
-    df = _PARQUET_HANDLES.get(key)
-    if df is None:
-        df = spark.read.parquet(full)
-        _PARQUET_HANDLES[key] = df
-    return df
-
-
-#: (application id, artifact dir, manifest mtime_ns) → first Row
-_FIRST_ROWS: dict[tuple[str, str, int], object] = {}
+    return _cached("handle", spark, full, mtime,
+                   lambda: spark.read.parquet(full))
 
 
 def cached_parquet_first(spark, root: str, name: str):
@@ -131,11 +188,8 @@ def cached_parquet_first(spark, root: str, name: str):
     saves one driver job per gate repetition without caching anything
     data-sized."""
     full = os.path.join(root, name)
-    try:
-        mtime = os.stat(os.path.join(root, _MANIFEST)).st_mtime_ns
-    except OSError:
+    mtime = _manifest_mtime(root)
+    if mtime is None:
         return spark.read.parquet(full).first()
-    key = (spark.sparkContext.applicationId, full, mtime)
-    if key not in _FIRST_ROWS:
-        _FIRST_ROWS[key] = cached_parquet(spark, root, name).first()
-    return _FIRST_ROWS[key]
+    return _cached("first", spark, full, mtime,
+                   lambda: cached_parquet(spark, root, name).first())

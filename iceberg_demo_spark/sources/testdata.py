@@ -2,9 +2,12 @@
 
 Tables: region nation customer supplier part orders lineitem events
 documents embeddings — one parquet file (or directory) each under the
-scale-factor dir. Loading is lazy; Catalyst pushes filters/column pruning
-into the parquet scan, so registering all views costs nothing until an
-action runs.
+scale-factor dir. Spark infers a parquet file's schema with one job that
+reads its footer; ``load_tables`` runs that job once per file version per
+application (``scratch.source_parquet`` caches the schema), so a repeated
+load builds fresh relations and registers views without running a job.
+Catalyst pushes filters/column pruning into the parquet scan, and every
+action scans the data.
 """
 
 from __future__ import annotations
@@ -12,6 +15,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from iceberg_demo_spark.scratch import source_parquet
 
 TPCH_TABLES = (
     "region",
@@ -58,7 +63,7 @@ def load_tables(spark: SparkSession, sf_dir: str,
     out: dict[str, DataFrame] = {}
     for name in tables:
         path = os.path.join(sf_dir, f"{name}.parquet")
-        df = spark.read.parquet(path)
+        df = source_parquet(spark, path)
         # Nanos timestamps arrive as bigint (see _configure): truncate to
         # micros — the same truncation DuckDB applies when materializing.
         for field in df.schema.fields:

@@ -37,3 +37,22 @@ def pytest_collection_finish(session):
 def spark():
     spark = get_spark("tests", shuffle_partitions=8)
     yield spark
+
+
+def jobs_submitted(spark, fn):
+    """``(fn(), number of Spark jobs fn submitted)``, read from the status
+    tracker under a job group unique to the call."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group, False)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -119,6 +119,36 @@ def test_connected_components_raises_on_non_convergence(spark):
     assert {r["cluster_root"] for r in labels} == {0}
 
 
+def test_connected_components_skips_size_count_when_broadcast_off(spark):
+    """Threshold 0 rules the single-partition collapse out, so the eager
+    edge count that sizes it must not run. Against a positive threshold
+    too small to collapse (same distributed plan), exactly that one
+    count job goes; AQE is off so each action is one job."""
+    from iceberg_demo_spark.operators.dedup import connected_components
+    from tests.conftest import jobs_submitted
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)],
+                                  "id_a long, id_b long")
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.enabled")
+    old = {k: spark.conf.get(k) for k in keys}
+
+    def run(threshold):
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        return jobs_submitted(spark, lambda: sorted(
+            tuple(r) for r in connected_components(edges).collect()))
+
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        off_rows, off_jobs = run("-1")
+        on_rows, on_jobs = run("1b")
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert off_rows == on_rows == [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)]
+    assert on_jobs - off_jobs == 1
+
+
 def test_connected_components_random_graphs_match_union_find(spark):
     """Property test: iterative min-label propagation equals a classic
     union-find over random edge sets (chains, stars, cycles, singletons)."""

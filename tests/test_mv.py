@@ -176,6 +176,20 @@ def test_rollup_with_predicate_compensation(engine):
                  expect_mv="mv_rp", expect_kind="rollup")
 
 
+def test_rollup_compensation_keeps_mixed_case_literals(engine, spark):
+    spark.createDataFrame(
+        [("1-URGENT", "F", 10.0), ("2-HIGH", "O", 5.0),
+         ("3-MEDIUM", "F", 1.0), ("1-URGENT", "O", 2.0)],
+        "prio string, status string, price double",
+    ).createOrReplaceTempView("prio_orders")
+    engine.sql("CREATE MATERIALIZED VIEW mv_prio AS SELECT prio, status, SUM(price) AS total FROM prio_orders GROUP BY prio, status")
+    q = ("SELECT prio, SUM(price) AS total FROM prio_orders "
+         "WHERE prio IN ('1-URGENT', '2-HIGH') GROUP BY prio")
+    _assert_same(engine, q, expect_mv="mv_prio", expect_kind="rollup")
+    assert {tuple(r) for r in engine.sql(q).collect()} == {
+        ("1-URGENT", 12.0), ("2-HIGH", 5.0)}
+
+
 def test_groupby_mismatch_no_rewrite(engine):
     engine.sql("CREATE MATERIALIZED VIEW mv_g AS SELECT region, SUM(amount) AS total FROM sales GROUP BY region")
     res = _assert_same(engine, "SELECT product, SUM(amount) AS total FROM sales GROUP BY product")

@@ -135,3 +135,25 @@ def test_discrete_percentiles_match_python(spark):
             exp = vals[math.ceil(p * len(vals)) - 1]
             assert got[col] == exp, (flag, p)
         assert got["n"] == len(vals)
+
+
+def test_sessionization_splits_on_sub_second_gap_over_30_min(spark, tmp_path):
+    """A gap of exactly 1800 s stays in one session; 1800.5 s starts a new
+    one, as the oracle's ``> INTERVAL 30 MINUTE`` says."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2024, 1, 1)
+    offsets = {1: [0.0, 1800.0, 3600.0], 2: [0.0, 1800.5, 1801.5]}
+    rows = [(u, t0 + dt.timedelta(seconds=s))
+            for u, secs in offsets.items() for s in secs]
+    pq.write_table(pa.table({
+        "event_id": list(range(len(rows))),
+        "ts": pa.array([ts for _u, ts in rows], pa.timestamp("us")),
+        "user_id": [u for u, _ts in rows],
+    }), str(tmp_path / "events.parquet"))
+    got = [tuple(r) for r in registry.QUERIES["events_sessionization"](
+        spark, str(tmp_path)).collect()]
+    assert got == [(1, 1, 3), (2, 2, 3)]

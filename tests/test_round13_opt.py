@@ -59,6 +59,7 @@ def test_broadcast_threshold_parses_suffixed_values(spark):
     try:
         for raw, want in [("10m", 10 * 1024 * 1024), ("1g", 1024 ** 3),
                           ("64MB", 64 * 1024 * 1024), ("512k", 512 * 1024),
+                          ("1p", 1024 ** 5), ("2pb", 2 * 1024 ** 5),
                           ("10485760", 10485760), ("-1", 0)]:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", raw)
             assert broadcast_threshold_bytes(spark) == want, raw
