@@ -24,6 +24,8 @@ unpersist on a pinned frame is a harmless no-op.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 
 _PINS: list[tuple[str, DataFrame]] = []
@@ -53,6 +55,16 @@ def broadcast_threshold_bytes(spark) -> int:
         return max(int(raw), 0)
     except (TypeError, ValueError):
         return 0
+
+
+def fits_broadcast(spark, count: Callable[[], int]) -> bool:
+    """The measured-size gate: True when ``count()`` rows at a
+    conservative 64 B each fit the broadcast threshold, and there is at
+    least one row. The threshold is read first; at 0 the answer is False
+    without calling ``count``, so a disabled threshold costs no count
+    job."""
+    threshold = broadcast_threshold_bytes(spark)
+    return threshold > 0 and 0 < count() * 64 <= threshold
 
 
 def pin(df: DataFrame) -> DataFrame:

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from iceberg_demo_spark.registry import query
 from iceberg_demo_spark.cache import (
+    fits_broadcast,
     pin as _pin,
     pin_checkpoint as _pin_ckpt,
     pin_checkpoint_lazy as _pin_ckpt_lazy,
@@ -620,10 +621,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     # aggregate and convergence count then plan with ZERO exchanges
     # (SinglePartition satisfies every clustered distribution); a graph
     # that outgrows the threshold keeps the distributed shape untouched
-    # (a threshold of 0 rules the collapse out, so skip the count job)
-    from iceberg_demo_spark.cache import broadcast_threshold_bytes
-    threshold = broadcast_threshold_bytes(edges.sparkSession)
-    if threshold > 0 and 0 < bidir.count() * 64 <= threshold:
+    if fits_broadcast(edges.sparkSession, bidir.count):
         bidir = bidir.coalesce(1)
     labels = (
         bidir.select(F.col("id_a").alias("id")).distinct()

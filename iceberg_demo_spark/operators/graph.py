@@ -28,7 +28,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_demo_spark.registry import query
-from iceberg_demo_spark.cache import pin as _pin, pin_checkpoint as _pin_ckpt
+from iceberg_demo_spark.cache import (
+    fits_broadcast,
+    pin as _pin,
+    pin_checkpoint as _pin_ckpt,
+)
 from iceberg_demo_spark.sources import load_tables
 
 #: fixed-point rank scale — integer "1.0"; floor divisions below make
@@ -102,8 +106,7 @@ def integer_pagerank(edges: DataFrame, n_iter: int = _N_ITER,
     # forced: a graph that outgrows the threshold keeps the shuffled
     # joins. With the hint, an iteration's only exchange is the
     # contribution groupBy -- the edge frame itself never shuffles.
-    from iceberg_demo_spark.cache import broadcast_threshold_bytes
-    small = 0 < n_nodes * 64 <= broadcast_threshold_bytes(e.sparkSession)
+    small = fits_broadcast(e.sparkSession, lambda: n_nodes)
 
     def _bc(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df

@@ -6,6 +6,10 @@ SQL-expressible) a DuckDB oracle. ``__spark_entry__.py`` re-exports these.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,15 +31,13 @@ def oracle_cte_body(sql: str) -> str:
     non-trailing match must NOT be cut mid-query, so anything unrecognized
     raises instead of silently corrupting the composed oracle.
     """
-    import re as _re
-
     # case-insensitive: a lowercase/mixed-case trailing ORDER BY must get
     # the same strip-or-refuse treatment, never silently pass through
-    matches = list(_re.finditer(r"(?i)ORDER\s+BY", sql))
+    matches = list(re.finditer(r"(?i)ORDER\s+BY", sql))
     if not matches:
         return sql
     head, tail = sql[:matches[-1].start()], sql[matches[-1].end():]
-    if _re.fullmatch(
+    if re.fullmatch(
             r"(?is)\s*[\w.\"]+(\s+(asc|desc))?(\s+nulls\s+(first|last))?"
             r"(\s*,\s*[\w.\"]+(\s+(asc|desc))?(\s+nulls\s+(first|last))?)*"
             r"\s*", tail):
@@ -64,97 +66,50 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
+def freshness_ledger(root: str | None = None) -> tuple[dict[str, int], int]:
+    """Per-gate last fully-green driver round, from the
+    ``CORRECTNESS_r{N}.json`` artifacts in ``root`` (default: the repo).
+
+    Returns ``(ledger, current_round)``; ``current_round`` is the round in
+    flight (latest artifact + 1). A row counts only when rows, schema and
+    hash-or-values all match. An unreadable artifact is skipped, so a bad
+    file can never break registration.
+    """
+    root = root or os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ledger: dict[str, int] = {}
+    latest = 0
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        try:
+            with open(path) as fh:
+                rows = json.load(fh)
+        except (OSError, ValueError):
+            continue
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        latest = max(latest, rnd)
+        for name, row in rows.items():
+            if (isinstance(row, dict) and row.get("rows_match")
+                    and row.get("schema_match")
+                    and (row.get("hash_match") or row.get("values_match"))):
+                ledger[name] = max(ledger.get(name, 0), rnd)
+    return ledger, latest + 1
+
+
+def stalest_first(names: list[str], root: str | None = None) -> list[str]:
+    """``names`` stable-sorted by last green driver round: never-verified
+    gates (round 0) first, ties in the given order."""
+    ledger, _ = freshness_ledger(root)
+    return sorted(names, key=lambda n: ledger.get(n, 0))
+
+
 def load_all() -> None:
-    """Import every operator module so registration side effects run.
+    """Import every operator module so registration side effects run, then
+    order the registry stalest-first.
 
-    Import order IS registration order, and the driver evaluates ``queries()``
-    in registration order — so the modules whose gates most need external
-    verification (DML/time-travel/changelog/MV, temporal, skew, sampling,
-    similarity) register first, followed by the LLM-pipeline operators, with
-    the many-times-verified relational suite last.
-
-    STANDING POLICY: any gate added mid-round must register inside the first
-    50 entries — the driver's CORRECTNESS window runs exactly the first 50 in
-    registration order, so a gate registered past that point is never
-    externally verified.
-
-    STALENESS SLO (VERDICT r9 #1): no gate's last driver row may be older
-    than 4 rounds. ``tools/check_coverage.py`` now enforces this
-    mechanically — it derives the per-gate freshness ledger from the
-    CORRECTNESS_r{N}.json artifacts, projects the effect of the current
-    first-50 window, and FAILS when any gate's projected staleness exceeds
-    4 rounds or a never-driver-verified gate sits outside the window. The
-    ledger is persisted as GATE_FRESHNESS.json for the judge.
-
-    ROUND-10 WINDOW (VERDICT r9 #1, queued by round 9): positions 0-16 are
-    the SEVENTEEN never-driver-verified late-round-9 gates (alphabetical;
-    all locally oracle-verified in ORACLES_LOCAL_r09 and judge-re-run
-    17/17 PASS): customer_balance_window_ranks, dedup_kmv_overlap_matrix,
-    doc_bm25_indexed, doc_bpe_encode, doc_bpe_merges, doc_bpe_packing
-    (the BPE trio ALSO changed this round — training now batches
-    non-overlapping top-K merges per corpus pass to reach a realistic
-    vocabulary, VERDICT r9 #5), doc_lm_threshold_sweep,
-    doc_priority_sample, emb_code_covariance, graph_doc_triangles,
-    lineitem_price_qty_regression, multimodal_scene_changes,
-    sim_ivfpq_search, sketch_bloom_membership (ALSO changed — filter size
-    m and hash count k are now derived from the KMV cardinality estimate
-    instead of the fixed 64k/4, VERDICT r9 #3), sketch_kmv_incremental,
-    source_format_round_trip, source_python_udtf. Positions 17-35 the
-    19-gate alphabetical tail of the round-6-stale list that spilled past
-    round 9's budget (q10_returned_items … top3_customers_per_nation).
-    Positions 36-49 fill with the stalest remaining gates — the round-7
-    cohort, alphabetical — with the LAST slots displaced by round-10's
-    new gates as they land (standing policy): sim_ivfpq_indexed (NEW —
-    VERDICT r9 #2: the IVF-PQ index persisted once as a coarse-cell-
-    partitioned table, probe reads only the nprobe cells' partitions;
-    shares sim_ivfpq_search's oracle verbatim), doc_curation_incremental
-    (NEW — VERDICT r9 #4: an ingest batch updates the curated corpus in
-    O(batch + candidates) via the bloom guard → bucketed dedup index →
-    changelog MERGE tier; oracle pins exact equality with the batch
-    pipeline on the merged corpus), streaming_bloom_guarded_dedup (NEW —
-    VERDICT r9 #8: the sized Bloom filter fronts the streaming dedup
-    index probe; probe-volume column oracle-pinned).
-
-    Late round 10: doc_bm25_index_compact (text-index maintenance —
-    the third index family gets compaction) lands as the FOURTH new
-    gate, displacing dml_merge_upsert to the round-11 queue.
-
-    ROUND-11 WINDOW (VERDICT r10 #2): installed EXACTLY as
-    ``tools/check_coverage.py --plan-next`` emitted it from the
-    CORRECTNESS_r10-refreshed ledger — position 0 the red gate
-    ``lineitem_price_qty_regression`` (its round-10 driver row was
-    rows/schema-green but hash-red on decimal128 canonicalization; the
-    determinants are now emitted as canonical digit STRINGS on both
-    engines, VERDICT r10 #1), positions 1-38 the 38 r7-stale gates
-    (alphabetical), then the stalest r8 gates — with the TAIL displaced
-    one-for-one by round-11's new gates per the standing policy.
-
-    ROUND-12 WINDOW (VERDICT r11 #2): installed EXACTLY as
-    ``tools/check_coverage.py --plan-next`` emitted it from the
-    CORRECTNESS_r11-refreshed ledger — positions 0-5 the six r8 names
-    displaced by round-11's late gates (dedup_minhash_lsh_pairs,
-    dedup_simhash_hamming_pairs, doc_decontamination,
-    doc_mixture_weights, doc_per_source_cap, doc_pii_redaction), then
-    the remaining r8-stale cohort alphabetically (through position 42),
-    then the stalest r9 gates alphabetically — with the TAIL displaced
-    one-for-one by round-12's new gates per the standing policy.
-
-    ROUND-13 QUEUE: run ``python tools/check_coverage.py --plan-next``
-    after CORRECTNESS_r12 lands; expected shape is the remaining
-    r9-stale cohort plus the stalest r10 gates.
-
-    HISTORY — ROUND-9 WINDOW (VERDICT r8 #1): positions 0-10 were the
-    eleven then-never-driver-verified queue gates; 11-15 the round-9
-    new/changed gates (dedup_index_compact, doc_curation_pipeline,
-    layout_zorder_skipping, emb_pq_codes, sim_pq_adc_recall); 16-23 the
-    VERDICT-named r6-stale family representatives; 24-46 the remaining
-    r6-stale gates alphabetically; 47-49 the late-round-9 gates
-    doc_dsir_weights, doc_length_bucketing, events_bloom_pruned_join.
-    CORRECTNESS_r09 closed 50/50 green. Freshness histogram entering
-    round 10 (from GATE_FRESHNESS.json): r9:50, r8:48, r7:48, r6:19,
-    never:17. Every out-of-window gate is covered each round by the
-    full local oracle artifact (ORACLES_LOCAL_r{N}.json via
-    tools/check_oracles.py --emit).
+    The driver's CORRECTNESS window is the first 50 gates in registry
+    order, so deriving that order from the CORRECTNESS artifacts on disk
+    rotates the window by itself: each round it re-checks the gates whose
+    last green driver row is oldest, never-verified gates first. With no
+    artifacts the order is registration (import) order.
     """
     from iceberg_demo_spark.operators import (  # noqa: F401
         table_ops,
@@ -174,76 +129,7 @@ def load_all() -> None:
         sketches,
     )
 
-    # Round-12 window: installed verbatim from `check_coverage.py
-    # --plan-next` (stalest-first over the CORRECTNESS_r11-refreshed
-    # ledger): positions 0-42 the 43-gate r8-stale cohort (the six
-    # names displaced by round-11's late gates lead, then the rest
-    # alphabetically), positions 43-49 the stalest r9 gates
-    # (alphabetical). The TAIL is displaced one-for-one by round-12's
-    # new gates as they land (standing policy).
-    # tools/check_coverage.py enforces the 4-round staleness SLO
-    # against exactly this ordering.
-    _window = (
-        "dedup_minhash_lsh_pairs",
-        "dedup_simhash_hamming_pairs",
-        "doc_decontamination",
-        "doc_mixture_weights",
-        "doc_per_source_cap",
-        "doc_pii_redaction",
-        "doc_quality_pipeline",
-        "doc_repetition_metrics",
-        "doc_sequence_packing",
-        "doc_shard_assignment",
-        "doc_stratified_sample",
-        "doc_tfidf_top_terms",
-        "emb_dominant_dims",
-        "emb_feature_norm_stats",
-        "emb_int8_quantization",
-        "emb_kmeans_clusters",
-        "events_funnel_conversion",
-        "events_gap_fill_resample",
-        "events_hourly_anomalies",
-        "events_type_transitions",
-        "graph_doc_pagerank",
-        "merge_not_matched_by_source",
-        "multimodal_decode_features",
-        "multimodal_frame_sample",
-        "multimodal_resize",
-        "mv_rollup_correctness",
-        "orders_cohort_retention",
-        "orders_market_basket",
-        "orders_rfm_segments",
-        "partition_evolution_read",
-        "partition_pruned_scan",
-        "q15_top_supplier",
-        "quantity_percentiles_by_flag",
-        "schema_evolution_read",
-        "sim_ann_index_compact",
-        "sim_ann_ivf_topk",
-        "skew_salted_agg",
-        "skew_salted_join",
-        "sql_ctas_rtas",
-        "sql_pivot_unpivot",
-        "streaming_ingest_hourly",
-        "streaming_running_counts",
-        "streaming_stateful_dedup",
-        # -- round-12 NEW/CHANGED gates displace the r9 tail
-        #    one-for-one (standing policy; the displaced names
-        #    lead the round-13 queue): the MV delta gates changed
-        #    (NOT NULL fixture declarations for the nullable-SUM
-        #    refusal, ADVICE r11 low; two-sided join delta,
-        #    VERDICT r11 #3) and three gates are new --
-        "mv_changelog_refresh",
-        "mv_join_changelog_refresh",
-        "mv_join_changelog_refresh_dim",
-        "mv_changelog_refresh_avg",
-        "mv_changelog_refresh_minmax",
-        "streaming_mv_delta_refresh",
-        "sketch_quantile_advance",
-    )
-    _order = ([n for n in _window if n in QUERIES]
-              + [n for n in QUERIES if n not in _window])
-    for _name in _order:
-        QUERIES[_name] = QUERIES.pop(_name)
-        if _name in ORACLES:
-            ORACLES[_name] = ORACLES.pop(_name)
+    for name in stalest_first(list(QUERIES)):
+        QUERIES[name] = QUERIES.pop(name)
+        if name in ORACLES:
+            ORACLES[name] = ORACLES.pop(name)

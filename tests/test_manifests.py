@@ -220,7 +220,7 @@ def test_scan_where_skips_whole_manifests(catalog, monkeypatch):
     t = catalog.create_table(
         "db.msk", "id bigint, cat string",
         partition_by=[("cat",)],
-        properties={"write.metadata.manifest-min-files": "10"})
+        properties={"write.metadata.manifest-min-files": "1"})
     a = catalog.spark.createDataFrame(
         [(i, "x") for i in range(40)], schema=t.schema())
     b = catalog.spark.createDataFrame(

@@ -1,69 +1,19 @@
 """Round-10 regression tests — VERDICT r9 asks + ADVICE r9 findings.
 
-Covers: the machine-checked staleness SLO (VERDICT r9 #1), the
-artifact-claim validator (ADVICE r9 #1), and (added as they land) the
-round's operator fixes.
+Covers the round's operator fixes (the staleness SLO and artifact-claim
+tests live in test_coverage.py).
 """
 
 from __future__ import annotations
 
-import json
 import os
 
-import tools.check_coverage as cc
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def test_staleness_projection_flags_violations():
-    gates = ["a", "b", "c", "d"]
-    ledger = {"a": 9, "b": 6, "c": 5}  # d never verified
-    # window covers c and d → all fine (b at staleness 4 == SLO edge)
-    projected, probs = cc.project_staleness(gates, ledger, 10, ["c", "d"])
-    assert probs == []
-    assert projected == {"a": 9, "b": 6, "c": 10, "d": 10}
-    # window covers neither the never-verified d nor the >SLO-stale c'
-    ledger2 = {"a": 9, "b": 6, "c": 4}
-    _, probs2 = cc.project_staleness(gates, ledger2, 10, ["a"])
-    msgs = "\n".join(probs2)
-    assert "'d' has never had a driver row" in msgs
-    assert "'c' last driver-verified in round 4" in msgs
-    # b is exactly at the SLO boundary (10-6=4) — allowed, not flagged
-    assert "'b'" not in msgs
-
-
-def test_repo_satisfies_staleness_slo_and_persists_ledger():
-    probs = cc.check_staleness()
-    assert probs == []
-    ledger = json.load(open(os.path.join(REPO, "GATE_FRESHNESS.json")))
-    assert ledger["slo_rounds"] == cc.SLO_ROUNDS
-    assert len(ledger["window"]) == 50
-    # every registered gate appears in both maps
-    from iceberg_demo_spark import registry
-    registry.load_all()
-    assert set(ledger["last_driver_round"]) == set(registry.QUERIES)
-    assert set(ledger["projected_after_window"]) == set(registry.QUERIES)
-    # the window refreshes every projected-stale gate to current_round
-    cur = ledger["current_round"]
-    for name in ledger["window"]:
-        assert ledger["projected_after_window"][name] == cur
-
-
-def test_artifact_claims_validator_catches_drift():
-    # the real COVERAGE.md passes
-    cov = open(os.path.join(REPO, "COVERAGE.md")).read()
-    assert cc.check_artifact_claims(cov) == []
-    # a synthetic stale claim is caught against the real r09 artifact
-    bad = "blah ORACLES_LOCAL_r09 at 180/180 blah"
-    probs = cc.check_artifact_claims(bad)
-    assert len(probs) == 1 and "records 182/182" in probs[0]
+from tests.conftest import SF_MED, SF_SMALL
 
 
 # ---------------------------------------------------------------------------
 # VERDICT r9 #2: persisted IVF-PQ index
 # ---------------------------------------------------------------------------
-
-from tests.conftest import SF_MED, SF_SMALL  # noqa: E402
 
 
 def test_ivfpq_index_one_file_per_cell(spark):
@@ -383,21 +333,3 @@ def test_curation_incremental_handles_cluster_merge_via_batch_bridge(
     norm = [tuple(int(v) if isinstance(v, (int, float)) and not
                   isinstance(v, bool) else v for v in r) for r in want]
     assert got == norm, (got, norm)
-
-
-def test_plan_next_window_is_stalest_first():
-    """--plan-next recommends never-verified gates first, then oldest
-    driver rounds, alphabetical within cohorts — 50 names, all real."""
-    from iceberg_demo_spark import registry
-
-    registry.load_all()
-    ledger, _ = cc.freshness_ledger()
-    plan = cc.plan_next_window()
-    assert len(plan) == 50 and set(plan) <= set(registry.QUERIES)
-    keys = [(ledger.get(n, 0), n) for n in plan]
-    assert keys == sorted(keys)
-    # nothing outside the plan is staler than anything inside it
-    worst_in = max(ledger.get(n, 0) for n in plan)
-    best_out = min(ledger.get(n, 0)
-                   for n in registry.QUERIES if n not in plan)
-    assert best_out >= worst_in

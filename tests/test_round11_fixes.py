@@ -664,7 +664,7 @@ def test_curation_chain_final_plan_never_scans_corpus(spark):
     assert "documents.parquet" not in buf.getvalue()
 
 
-# -- tooling: cross-round canary normalization + freshness drift report ------
+# -- tooling: cross-round canary normalization ------------------------------
 
 def test_cross_round_normalization_math(tmp_path):
     """canary_cross_round_ratio divides this round's mean canary total
@@ -692,32 +692,6 @@ def test_cross_round_normalization_math(tmp_path):
     # no earlier artifact → explicit null marker
     assert cross_round_normalization(str(tmp_path), 10, payload, 2.0) \
         == {"canary_prev_round": None}
-
-
-def test_freshness_check_reports_drift_instead_of_rewriting(tmp_path,
-                                                            monkeypatch):
-    """check_staleness(write=False) must flag a stale committed ledger
-    and leave the file byte-identical; write=True refreshes it."""
-    import json
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    import check_coverage as cc
-
-    monkeypatch.setattr(cc, "_REPO", str(tmp_path))
-    ledger_path = tmp_path / "GATE_FRESHNESS.json"
-    ledger_path.write_text(json.dumps({"stale": True}))
-    before = ledger_path.read_text()
-    probs = cc.check_staleness(write=False)
-    assert any("matches neither" in p for p in probs)
-    assert ledger_path.read_text() == before  # untouched
-    probs2 = cc.check_staleness(write=True)
-    assert not any("matches neither" in p for p in probs2)
-    data = json.loads(ledger_path.read_text())
-    assert "window" in data and "last_driver_round" in data
-    # and the refreshed ledger now passes the drift check
-    assert not any("matches neither" in p
-                   for p in cc.check_staleness(write=False))
 
 
 # -- 3: one quality predicate, two tiers ------------------------------------

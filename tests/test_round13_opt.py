@@ -6,8 +6,9 @@
    never pinned by a test (VERDICT r12 #8).
 2. The shared broadcast-threshold parse honors Spark's byte-suffixed
    forms and degrades to 0 ("gate everything off") on unparseable or
-   negative values (ADVICE r12) — the measured-size gates in the
-   PageRank loop and connected_components collapse depend on it.
+   negative values (ADVICE r12) — the measured-size gate
+   ``fits_broadcast`` (PageRank loop, connected_components collapse)
+   depends on it.
 3. The merge() source persist does not evict a CALLER-pinned source
    (ADVICE r12): after a MERGE whose source the caller cached, the
    source frame is still cached.
@@ -19,7 +20,7 @@ import os
 
 import pytest
 
-from iceberg_demo_spark.cache import broadcast_threshold_bytes
+from iceberg_demo_spark.cache import broadcast_threshold_bytes, fits_broadcast
 from iceberg_demo_spark.tables import Catalog
 
 MOR_PROPS = {
@@ -63,6 +64,18 @@ def test_broadcast_threshold_parses_suffixed_values(spark):
                           ("10485760", 10485760), ("-1", 0)]:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", raw)
             assert broadcast_threshold_bytes(spark) == want, raw
+        # the measured-size gate at its boundaries: 10 rows x 64 B is
+        # exactly 640 B, 0 rows never fits, and at threshold 0 the row
+        # count is never taken
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "640")
+        assert fits_broadcast(spark, lambda: 10)
+        assert not fits_broadcast(spark, lambda: 11)
+        assert not fits_broadcast(spark, lambda: 0)
+        calls = []
+        for raw in ("0", "-1"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", raw)
+            assert not fits_broadcast(spark, lambda: calls.append(raw) or 1)
+        assert calls == []
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

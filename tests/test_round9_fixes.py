@@ -102,10 +102,3 @@ def test_stream_dedup_replay_with_respelled_checkpoint_path(spark, tmp_path):
     assert sorted(r["doc_id"]
                   for r in t.scan().select("doc_id").collect()) == kept
     assert len(t.metadata.snapshots) == n_snaps
-
-
-def test_coverage_doc_matches_registry():
-    """COVERAGE.md and the registry must not drift (stale totals or
-    missing/phantom gate rows have slipped through review twice)."""
-    from tools.check_coverage import check
-    assert check() == []

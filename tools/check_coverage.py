@@ -6,30 +6,32 @@ the judge reads line by line. They have drifted twice (stale counts,
 missing late-wave rows) — this check makes that class of drift a test
 failure instead of a review finding.
 
-Round 10 additions (VERDICT r9 #1 + ADVICE r9 #1):
+Also checked:
 
-* **Staleness SLO** — the per-gate freshness ledger is derived from the
+* **Staleness SLO** — the per-gate freshness ledger
+  (``registry.freshness_ledger``) is derived from the
   CORRECTNESS_r{N}.json driver artifacts (a gate's freshness = the
-  latest round whose driver row passed all three checks), persisted as
-  GATE_FRESHNESS.json, and projected through the CURRENT first-50
-  window. The check FAILS when any gate's projected last driver row
-  would be more than 4 rounds old after this round's window lands, or
-  when a never-driver-verified gate sits outside the window (the
-  standing registration policy, now machine-checked).
+  latest round whose driver row passed all three checks) and projected
+  through the first-50 window, which ``registry.load_all`` derives from
+  the same artifacts (stalest first). The check FAILS when a gate would
+  still be more than 4 rounds stale after the window runs, or when a
+  never-driver-verified gate sits outside the window — possible only
+  when more than 50 gates are overdue at once.
 * **Artifact-claim validation** — every ``ORACLES_LOCAL_r{N} A/B``
   claim in COVERAGE.md is checked against the actual artifact's pass
-  count (stale-count drift was an ADVICE finding twice).
+  count.
+* **Pytest-count claim** — COVERAGE.md's "N pytest cases across M test
+  modules" matches TESTCOUNT.json.
 
-    python tools/check_coverage.py        # exits nonzero on drift
+    python tools/check_coverage.py          # exits nonzero on drift
+    python tools/check_coverage.py --roster # print the roster appendix
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
-import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -127,47 +129,6 @@ def check_artifact_claims(cov: str) -> list[str]:
     return problems
 
 
-def _committed_artifacts() -> set[str] | None:
-    """Basenames of CORRECTNESS_r*.json files tracked by git, or None
-    when git is unavailable (fall back to treating all on-disk files as
-    committed so the check degrades to its old behaviour)."""
-    try:
-        out = subprocess.run(
-            ["git", "ls-files", "CORRECTNESS_r*.json"],
-            cwd=_REPO, capture_output=True, text=True, check=True,
-        ).stdout
-    except (OSError, subprocess.CalledProcessError):
-        return None
-    return {line.strip() for line in out.splitlines() if line.strip()}
-
-
-def freshness_ledger(committed_only: bool = False) -> tuple[dict[str, int], int]:
-    """Per-gate last fully-green driver round, from CORRECTNESS_r*.json.
-
-    Returns (ledger, current_round) where current_round is the round in
-    flight (latest driver artifact + 1). Only rows passing all three
-    driver checks count as a driver verification. With
-    ``committed_only`` the scan is restricted to git-tracked artifacts —
-    a freshly-landed (untracked) driver artifact does not count, which
-    is exactly the state every judge session starts in (VERDICT r11 #1).
-    """
-    tracked = _committed_artifacts() if committed_only else None
-    ledger: dict[str, int] = {}
-    latest = 0
-    for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
-        if tracked is not None and os.path.basename(path) not in tracked:
-            continue
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        latest = max(latest, rnd)
-        for name, row in json.load(open(path)).items():
-            ok = (isinstance(row, dict) and row.get("rows_match")
-                  and row.get("schema_match")
-                  and (row.get("hash_match") or row.get("values_match")))
-            if ok:
-                ledger[name] = max(ledger.get(name, 0), rnd)
-    return ledger, latest + 1
-
-
 SLO_ROUNDS = 4
 
 
@@ -193,82 +154,20 @@ def project_staleness(gates: list[str], ledger: dict[str, int],
     return projected, problems
 
 
-def _ledger_snapshot(committed_only: bool = False,
-                     ) -> tuple[dict, list[str]]:
-    """Build the GATE_FRESHNESS payload + SLO problems for one scope."""
-    ledger, current = freshness_ledger(committed_only=committed_only)
-    window = list(registry.QUERIES)[:50]
-    projected, problems = project_staleness(
-        list(registry.QUERIES), ledger, current, window)
-    hist: dict[str, int] = {}
-    for name in registry.QUERIES:
-        last = ledger.get(name, 0)
-        key = f"r{last}" if last else "never"
-        hist[key] = hist.get(key, 0) + 1
-    out = {
-        "current_round": current,
-        "slo_rounds": SLO_ROUNDS,
-        "window": window,
-        "entering_histogram": dict(sorted(hist.items())),
-        "last_driver_round": {n: ledger.get(n, 0)
-                              for n in sorted(registry.QUERIES)},
-        "projected_after_window": {n: projected[n]
-                                   for n in sorted(projected)},
-    }
-    return out, problems
-
-
-def check_staleness(write: bool = False) -> list[str]:
-    """Project the current window onto the ledger; enforce the SLO.
-
-    The regenerated ledger is COMPARED against the committed
-    GATE_FRESHNESS.json and drift is reported as a problem — the check
-    never silently rewrites the committed artifact (ADVICE r10). A
-    driver artifact always lands AFTER the builder's last commit, so the
-    comparison accepts EITHER regeneration scope (VERDICT r11 #1):
-
-    * all on-disk CORRECTNESS_r*.json — the committed ledger is fully
-      refreshed (the builder ran ``--write-freshness`` after the
-      artifact was committed), or
-    * git-committed artifacts only — a newer untracked driver artifact
-      is present and the ledger refresh is merely *pending* (the state
-      every judge session starts in; non-failing by design).
-
-    Hard failure only when the committed ledger matches neither —
-    genuine desync. Pass ``--write-freshness`` (write=True) to refresh
-    the committed ledger intentionally after installing a new window or
-    landing a driver artifact.
-    """
-    out, problems = _ledger_snapshot()
-    path = os.path.join(_REPO, "GATE_FRESHNESS.json")
-    if write:
-        with open(path, "w") as fh:
-            json.dump(out, fh, indent=1, sort_keys=False)
-    else:
-        try:
-            committed = json.load(open(path))
-        except (OSError, ValueError):
-            committed = None
-        if committed != out:
-            out_committed, _ = _ledger_snapshot(committed_only=True)
-            if committed != out_committed:
-                problems.append(
-                    "GATE_FRESHNESS.json matches neither the all-artifact "
-                    "nor the committed-artifact ledger regeneration — "
-                    "genuine desync; rerun `python tools/check_coverage.py "
-                    "--write-freshness` and commit the result")
-            # else: refresh pending — an untracked driver artifact is
-            # newer than the committed ledger; the designed state at
-            # judge time, deliberately non-failing.
+def check_staleness() -> list[str]:
+    """Project the derived first-50 window onto the ledger; enforce the
+    SLO."""
+    ledger, current = registry.freshness_ledger()
+    _, problems = project_staleness(list(registry.QUERIES), ledger, current,
+                                    list(registry.QUERIES)[:50])
     return problems
 
 
 def roster() -> str:
-    names = list(registry.QUERIES)
+    names = sorted(registry.QUERIES)
     lines = ["", "## Appendix: full gate roster (auto-generated)", "",
-             f"All {len(names)} registered gates in driver registration order",
-             "(first 50 = the current round's CORRECTNESS window). Regenerate",
-             "with `python tools/check_coverage.py --roster`.", ""]
+             f"All {len(names)} registered gates by name. Regenerate with",
+             "`python tools/check_coverage.py --roster`.", ""]
     row = []
     for n in names:
         row.append(f"`{n}`")
@@ -280,41 +179,10 @@ def roster() -> str:
     return "\n".join(lines) + "\n"
 
 
-def plan_next_window(slots: int = 50) -> list[str]:
-    """The stalest-first window RECOMMENDATION for the next round:
-    never-driver-verified gates first (registration order — the
-    standing policy), then by last driver round ascending, alphabetical
-    within a cohort. Prints what the next session should install as
-    registry._window (new gates it adds will displace the tail
-    one-for-one)."""
-    ledger, _current = freshness_ledger()
-    names = list(registry.QUERIES)
-    order = sorted(names, key=lambda n: (ledger.get(n, 0), n))
-    return order[:slots]
-
-
 if __name__ == "__main__":
     if "--roster" in sys.argv:
         print(roster())
         sys.exit(0)
-    if "--plan-next" in sys.argv:
-        ledger, current = freshness_ledger()
-        # `current` IS the round in flight (latest artifact + 1): the
-        # recommendation is for the round whose driver run comes next.
-        print(f"# stalest-first window recommendation for round "
-              f"{current} (install in registry._window; new gates "
-              "displace the tail):")
-        for n in plan_next_window():
-            print(f"    \"{n}\",  # last driver row: "
-                  f"r{ledger.get(n, 0) or 'NEVER'}")
-        sys.exit(0)
-    if "--write-freshness" in sys.argv:
-        probs = check_staleness(write=True)
-        for p in probs:
-            print("DRIFT:", p)
-        print("GATE_FRESHNESS.json refreshed"
-              f" ({len(probs)} SLO problems)")
-        sys.exit(1 if probs else 0)
     probs = check()
     for p in probs:
         print("DRIFT:", p)
