@@ -1507,16 +1507,18 @@ def sql_pivot_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iceberg_demo_spark.scratch import scratch_path
 
     eng = Engine(spark, scratch_path(f"glacier_sqlpivot_{_sf_tag(sf_dir)}"))
-    # ALWAYS refresh db.ev from the live parquet: a warehouse keyed only
+    # ALWAYS rebuild db.ev from the live parquet: a warehouse keyed only
     # by the sf tag would silently serve stale rows if the testdata under
     # the same sf_dir were regenerated, while the shared DuckDB oracle
-    # reads the live files — CTAS/RTAS is cheap at gate scale.
+    # reads the live files — CTAS is cheap at gate scale. The copy is a
+    # cache, so the old one is deleted rather than replaced in place: a
+    # copy an older table format wrote is never read.
+    import shutil
+
     t = load_tables(spark, sf_dir, ("events",))
     ev = t["events"].select("event_type", "ts")
-    if eng.catalog.table_exists("db.ev"):
-        eng.catalog.replace_table_as("db.ev", ev)
-    else:
-        eng.catalog.create_table_as("db.ev", ev)
+    shutil.rmtree(eng.catalog._location("db.ev"), ignore_errors=True)
+    eng.catalog.create_table_as("db.ev", ev)
     in_list = ", ".join(f"'{t}' AS {t}" for t in _EVENT_TYPES)
     cols = ", ".join(_EVENT_TYPES)
     return eng.sql(f"""

@@ -1443,7 +1443,7 @@ def stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries on clustered keys — candidate files ∝ predicate range, not
     table size, before any Spark job runs. Write-time clustering costs
     one range shuffle; every subsequent selective read skips cold files
-    entirely (and with manifest-backed snapshots, whole manifests).
+    entirely (and, through the manifest summaries, whole manifests).
     """
     t_in = load_tables(spark, sf_dir, ("orders",))
     cat = _scratch(spark)

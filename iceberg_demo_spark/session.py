@@ -38,12 +38,22 @@ _DEFAULTS = {
 }
 
 
+def default_driver_mem() -> str:
+    """Local driver heap sized from physical RAM: everything but 32 GiB,
+    at least a quarter of RAM and at most 48g. A host with 80 GB or more
+    gets 48g; a 16 GB host gets 4g, leaving room for the Python side."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, max(phys_mb // 4, phys_mb - 32 * 1024))}m"
+
+
 def get_spark(app_name: str = "iceberg_demo_spark", master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores).
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores)
+    and ``SPARK_GRAFT_DRIVER_MEM`` the local driver heap (default:
+    :func:`default_driver_mem`).
     On a real cluster, pass ``master=None`` and submit with spark-submit —
     every config here is master-agnostic.
     """
@@ -58,7 +68,9 @@ def get_spark(app_name: str = "iceberg_demo_spark", master: str | None = None,
         builder = builder.config(k, v)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     if master.startswith("local"):
-        builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        builder = builder.config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -5,18 +5,18 @@ Mirrors the capability surface of the reference's Iceberg tables
 :1938-2041 snapshots/time-travel) without the Iceberg runtime: a table is a
 directory of parquet data files plus a JSON metadata log.
 
-Scale notes. Small snapshots embed their data-file list in the metadata
-JSON; past ``write.metadata.manifest-min-files`` (default 1000) the list
-spills to IMMUTABLE manifest files (round 5) — the metadata JSON then
-stores per-manifest summaries only, commits write one delta manifest plus
-rewrites of removal-affected manifests (O(delta) I/O), and scan planning
-lazily loads manifests through a process-wide cache. This mirrors
-production Iceberg's manifest design (docs/spark-queries.md:215-472
-exposes it through the metadata tables) minus manifest-list files and
-per-manifest column stats. All other mechanics (field-id schema
-evolution, hidden partition transforms, copy-on-write deltas, ref
-pointers) are scale-independent driver-side metadata and match the
-production design.
+Scale notes. Every snapshot is stored the way production Iceberg stores
+it: the metadata JSON keeps snapshot headers only, each header points to
+ONE immutable manifest list, the list points to immutable manifests and
+the manifests list the data files. A commit writes one delta manifest for
+its added files, rewrites only the manifests that lose a file and writes
+one manifest list (O(delta) I/O); scan planning loads manifests lazily
+through one bounded cache and skips whole manifests whose partition or
+column-bound summary proves no match (docs/spark-queries.md:215-472
+exposes the layer through the metadata tables). All other mechanics
+(field-id schema evolution, hidden partition transforms, copy-on-write
+deltas, ref pointers) are scale-independent driver-side metadata and
+match the production design.
 """
 
 from __future__ import annotations
@@ -24,8 +24,10 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
 import time
 import uuid
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 MAIN_BRANCH = "main"
@@ -151,71 +153,72 @@ class DeleteFile:
         return DeleteFile(d["path"], d["records"], d["bytes"])
 
 
-#: loaded-manifest cache. Manifest files are IMMUTABLE once written (new
-#: file-set states always get new manifest files), so a process-wide cache
-#: keyed on absolute path is safe and makes repeat commit planning / scan
-#: planning O(delta) reads instead of re-reading carried manifests.
-_MANIFEST_CACHE: dict[str, list[DataFile]] = {}
+#: most entries the metadata-file cache holds. Manifests and manifest
+#: lists are IMMUTABLE once written (a new file-set state always gets new
+#: files), so evicting one only costs a re-read on its next use.
+METADATA_CACHE_SIZE = 256
+
+#: absolute path → parsed manifest (list[DataFile]) or manifest list
+#: (dict), least recently used first.
+_METADATA_CACHE: OrderedDict[str, object] = OrderedDict()
+_METADATA_CACHE_LOCK = threading.Lock()
 
 
-def load_manifest(location: str, rel_path: str) -> list[DataFile]:
-    ap = os.path.join(location, rel_path)
-    cached = _MANIFEST_CACHE.get(ap)
-    if cached is None:
-        with open(ap) as fh:
-            cached = [DataFile.from_json(f) for f in json.load(fh)]
-        _MANIFEST_CACHE[ap] = cached
-    return cached
+def _cache_put(path: str, value) -> None:
+    with _METADATA_CACHE_LOCK:
+        _METADATA_CACHE[path] = value
+        _METADATA_CACHE.move_to_end(path)
+        while len(_METADATA_CACHE) > METADATA_CACHE_SIZE:
+            _METADATA_CACHE.popitem(last=False)
 
 
-def write_changes(location: str, added: list[str], removed: list[str],
-                  tag: str) -> str:
-    """Persist a large commit's added/removed path lists as an immutable
-    sidecar (same motivation as manifests: the lists are O(delta) for THIS
-    commit, but inline they would be re-serialized into every subsequent
-    metadata JSON save — O(total history))."""
+def _cached_json(path: str, parse):
+    """``parse(json in path)``, kept in the metadata-file cache."""
+    with _METADATA_CACHE_LOCK:
+        hit = _METADATA_CACHE.get(path)
+        if hit is not None:
+            _METADATA_CACHE.move_to_end(path)
+            return hit
+    with open(path) as fh:
+        value = parse(json.load(fh))
+    _cache_put(path, value)
+    return value
+
+
+def forget_metadata_file(path: str) -> None:
+    """Drop a deleted manifest or manifest list from the cache."""
+    with _METADATA_CACHE_LOCK:
+        _METADATA_CACHE.pop(path, None)
+
+
+def _write_metadata_file(location: str, prefix: str, tag: str,
+                         doc) -> tuple[str, str]:
+    """Write ``doc`` as a new immutable JSON file under metadata/;
+    returns (relative path, absolute path)."""
     md = os.path.join(location, "metadata")
     os.makedirs(md, exist_ok=True)
-    name = f"changes-{tag}-{uuid.uuid4().hex[:12]}.json"
+    name = f"{prefix}-{tag}-{uuid.uuid4().hex[:12]}.json"
     path = os.path.join(md, name)
     tmp = path + ".tmp"
     with open(tmp, "w") as fh:
-        json.dump({"added": added, "removed": removed}, fh)
+        json.dump(doc, fh)
     os.rename(tmp, path)
-    rel = os.path.join("metadata", name)
-    _CHANGES_CACHE[path] = (list(added), list(removed))
-    return rel
+    return os.path.join("metadata", name), path
 
 
-_CHANGES_CACHE: dict[str, tuple[list[str], list[str]]] = {}
-
-
-def load_changes(location: str, rel_path: str) -> tuple[list[str], list[str]]:
-    ap = os.path.join(location, rel_path)
-    cached = _CHANGES_CACHE.get(ap)
-    if cached is None:
-        with open(ap) as fh:
-            d = json.load(fh)
-        cached = (d.get("added", []), d.get("removed", []))
-        _CHANGES_CACHE[ap] = cached
-    return cached
+def load_manifest(location: str, rel_path: str) -> list[DataFile]:
+    return _cached_json(os.path.join(location, rel_path),
+                        lambda d: [DataFile.from_json(f) for f in d])
 
 
 def write_manifest(location: str, files: list[DataFile], tag: str) -> dict:
     """Persist one immutable manifest (a JSON array of data-file entries)
-    under metadata/ and return its snapshot-embeddable summary entry. The
-    summary carries counts so metadata-table reads and size rollups never
-    need to open the manifest."""
-    md = os.path.join(location, "metadata")
-    os.makedirs(md, exist_ok=True)
-    name = f"manifest-{tag}-{uuid.uuid4().hex[:12]}.json"
-    path = os.path.join(md, name)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump([f.to_json() for f in files], fh)
-    os.rename(tmp, path)
-    rel = os.path.join("metadata", name)
-    _MANIFEST_CACHE[path] = list(files)
+    under metadata/ and return its manifest-list entry. The entry carries
+    counts so metadata-table reads and size rollups never need to open
+    the manifest."""
+    rel, path = _write_metadata_file(
+        location, "manifest", tag, [f.to_json() for f in files])
+    _cache_put(path, list(files))
     entry = {
         "path": rel,
         "n_files": len(files),
@@ -276,103 +279,62 @@ def write_manifest(location: str, files: list[DataFile], tag: str) -> dict:
     return entry
 
 
-_MANIFEST_LIST_CACHE: dict[str, list[dict]] = {}
-
-
 def write_manifest_list(location: str, manifests: list[dict],
+                        added: str | None, removed: list[str],
                         tag: str) -> str:
-    """Persist a snapshot's manifest summaries as ONE immutable
-    manifest-list file (production Iceberg's snapshot → manifest-list →
-    manifests → data-files hierarchy). Keeps the metadata JSON O(snapshots)
-    instead of O(snapshots × manifests): at 10⁷ files / 10⁴ manifests the
-    summaries would otherwise be re-serialized into every metadata save."""
-    md = os.path.join(location, "metadata")
-    os.makedirs(md, exist_ok=True)
-    name = f"manifest-list-{tag}-{uuid.uuid4().hex[:12]}.json"
-    path = os.path.join(md, name)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifests, fh)
-    os.rename(tmp, path)
-    rel = os.path.join("metadata", name)
-    _MANIFEST_LIST_CACHE[path] = list(manifests)
+    """Persist a snapshot's manifest list: ONE immutable file holding the
+    manifest entries (production Iceberg's snapshot → manifest list →
+    manifests → data files hierarchy), the path of the commit's delta
+    manifest (``added``, None when the commit added no file) and the
+    paths the commit removed. Keeps the metadata JSON O(snapshots) no
+    matter how many files or manifests a table accumulates."""
+    doc = {"manifests": manifests, "added": added, "removed": removed}
+    rel, path = _write_metadata_file(location, "manifest-list", tag, doc)
+    _cache_put(path, doc)
     return rel
 
 
-def load_manifest_list(location: str, rel_path: str) -> list[dict]:
-    ap = os.path.join(location, rel_path)
-    cached = _MANIFEST_LIST_CACHE.get(ap)
-    if cached is None:
-        with open(ap) as fh:
-            cached = json.load(fh)
-        _MANIFEST_LIST_CACHE[ap] = cached
-    return cached
+def load_manifest_list(location: str, rel_path: str) -> dict:
+    return _cached_json(os.path.join(location, rel_path), lambda d: d)
 
 
 class Snapshot:
     """One committed table state.
 
-    Storage modes for the file list (the round-5 manifest layer +
-    round-6 manifest list — production Iceberg's design, simplified):
-
-    - **inline** (small tables): ``files`` serialized into the metadata
-      JSON, exactly the original single-document model.
-    - **manifest-backed** (past ``write.metadata.manifest-min-files``):
-      the snapshot stores ONE ``manifest_list`` path; that immutable
-      file holds the manifest summaries, and the file list loads lazily
-      (and cached) on first ``.files`` access. Commits then append ONE
-      delta manifest, rewrite only removal-affected manifests, and write
-      one new (small) manifest list — commit I/O is O(delta + manifests),
-      never O(total files); see Table._plan_manifests. Metadata JSONs
-      written before round 6 carried the summaries inline under
-      ``manifests``; both forms load.
+    The metadata JSON stores only the snapshot's header: ids, parent,
+    timestamp, operation, schema id, summary, position-delete files and
+    the path of its ``manifest_list``. That immutable file holds the
+    manifest entries, the commit's delta manifest and its removed paths;
+    the file list loads lazily (and cached) on first ``.files`` access.
+    Every commit writes one delta manifest for its added files, rewrites
+    only the manifests that lose a file and writes one manifest list, so
+    commit I/O is O(delta + manifests), never O(total files); see
+    Table._plan_manifests.
     """
 
     def __init__(self, snapshot_id: int, parent_id: int | None,
                  timestamp_ms: int, operation: str, schema_id: int,
-                 files: list[DataFile] | None = None,
-                 added_files: list[str] | None = None,
-                 removed_files: list[str] | None = None,
+                 manifest_list: str, location: str,
                  summary: dict[str, str] | None = None,
                  delete_files: list[DeleteFile] | None = None,
-                 manifests: list[dict] | None = None,
-                 location: str | None = None,
-                 changes_path: str | None = None,
-                 manifest_list: str | None = None):
+                 files: list[DataFile] | None = None):
         self.snapshot_id = snapshot_id
         self.parent_id = parent_id
         self.timestamp_ms = timestamp_ms
         self.operation = operation
         self.schema_id = schema_id
-        self._files = list(files) if files is not None else None
-        self._added_files = (list(added_files)
-                             if added_files is not None else None)
-        self._removed_files = (list(removed_files)
-                               if removed_files is not None else None)
-        self.summary = dict(summary or {})
-        self.delete_files = list(delete_files or [])
-        self._manifests = list(manifests) if manifests is not None else None
         self.manifest_list = manifest_list
         self._location = location
-        self.changes_path = changes_path
-        if (self._files is None and not self._manifests
-                and not self.manifest_list):
-            self._files = []
-        if self.changes_path is None:
-            self._added_files = self._added_files or []
-            self._removed_files = self._removed_files or []
+        self.summary = dict(summary or {})
+        self.delete_files = list(delete_files or [])
+        self._files = list(files) if files is not None else None
+
+    def _list(self) -> dict:
+        return load_manifest_list(self._location, self.manifest_list)
 
     @property
     def manifests(self) -> list[dict]:
-        if self._manifests is None:
-            self._manifests = (
-                load_manifest_list(self._location, self.manifest_list)
-                if self.manifest_list else [])
-        return self._manifests
-
-    @manifests.setter
-    def manifests(self, value: list[dict]) -> None:
-        self._manifests = list(value or [])
+        return self._list()["manifests"]
 
     @property
     def files(self) -> list[DataFile]:
@@ -385,27 +347,32 @@ class Snapshot:
 
     @property
     def added_files(self) -> list[str]:
-        if self._added_files is None:
-            self._added_files, self._removed_files = load_changes(
-                self._location, self.changes_path)
-        return self._added_files
+        added = self._list()["added"]
+        return ([f.path for f in load_manifest(self._location, added)]
+                if added else [])
 
     @property
     def removed_files(self) -> list[str]:
-        if self._removed_files is None:
-            self._added_files, self._removed_files = load_changes(
-                self._location, self.changes_path)
-        return self._removed_files
+        return self._list()["removed"]
 
     @property
     def n_data_files(self) -> int:
         """File count without forcing a manifest load."""
-        if self.manifests and self._files is None:
+        if self._files is None:
             return sum(m["n_files"] for m in self.manifests)
-        return len(self.files)
+        return len(self._files)
+
+    def metadata_paths(self) -> set[str]:
+        """Relative paths of every metadata file this snapshot references:
+        its manifest list, its manifests and its delta manifest."""
+        doc = self._list()
+        out = {self.manifest_list, *(m["path"] for m in doc["manifests"])}
+        if doc["added"]:
+            out.add(doc["added"])
+        return out
 
     def to_json(self) -> dict:
-        d = {
+        return {
             "snapshot_id": self.snapshot_id,
             "parent_id": self.parent_id,
             "timestamp_ms": self.timestamp_ms,
@@ -413,41 +380,21 @@ class Snapshot:
             "schema_id": self.schema_id,
             "summary": self.summary,
             "delete_files": [f.to_json() for f in self.delete_files],
+            "manifest_list": self.manifest_list,
         }
-        if self.changes_path:
-            d["changes"] = self.changes_path
-        else:
-            d["added_files"] = self.added_files
-            d["removed_files"] = self.removed_files
-        if self.manifest_list:
-            d["manifest_list"] = self.manifest_list
-        elif self._manifests:
-            d["manifests"] = self._manifests  # pre-round-6 inline form
-        else:
-            d["files"] = [f.to_json() for f in self.files]
-        return d
 
     @staticmethod
-    def from_json(d: dict, location: str | None = None) -> "Snapshot":
-        manifests = d.get("manifests")
-        manifest_list = d.get("manifest_list")
-        changes_path = d.get("changes")
+    def from_json(d: dict, location: str) -> "Snapshot":
         return Snapshot(
             d["snapshot_id"],
             d.get("parent_id"),
             d["timestamp_ms"],
             d["operation"],
             d["schema_id"],
-            ([DataFile.from_json(f) for f in d["files"]]
-             if not manifests and not manifest_list else None),
-            (d.get("added_files", []) if not changes_path else None),
-            (d.get("removed_files", []) if not changes_path else None),
+            d["manifest_list"],
+            location,
             d.get("summary", {}),
             [DeleteFile.from_json(f) for f in d.get("delete_files", [])],
-            manifests=manifests,
-            location=location,
-            changes_path=changes_path,
-            manifest_list=manifest_list,
         )
 
 
@@ -646,7 +593,7 @@ class TableMetadata:
         path = os.path.join(md, f"v{self.version}.metadata.json")
         tmp = f"{path}.{os.getpid()}.{id(self)}.tmp"
         with open(tmp, "w") as fh:
-            json.dump(self.to_json(), fh, indent=1)
+            json.dump(self.to_json(), fh, separators=(",", ":"))
         try:
             os.link(tmp, path)  # atomic create-exclusive: the real CAS
         except FileExistsError:

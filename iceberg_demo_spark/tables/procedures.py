@@ -177,32 +177,18 @@ def expire_snapshots(table: Table, older_than_ms: int | None = None,
         p = os.path.join(table.location, rel)
         if os.path.exists(p):
             os.remove(p)
-    # Manifest-layer cleanup (round 5): manifest/changes sidecars referenced
-    # ONLY by expired snapshots are dead metadata — remove them (and their
-    # cache entries) so spilled tables don't accrete unreferenced manifests.
-    live_meta: set[str] = set()
-    for s in survivors:
-        live_meta.update(m["path"] for m in s.manifests)
-        if s.changes_path:
-            live_meta.add(s.changes_path)
-        if s.manifest_list:
-            live_meta.add(s.manifest_list)
-    dead_meta: set[str] = set()
-    for s in md.snapshots:
-        if s.snapshot_id in expire:
-            dead_meta.update(m["path"] for m in s.manifests)
-            if s.changes_path:
-                dead_meta.add(s.changes_path)
-            if s.manifest_list:
-                dead_meta.add(s.manifest_list)
-    from iceberg_demo_spark.tables import format as _fmt
+    # Metadata cleanup: manifest lists and manifests referenced ONLY by
+    # expired snapshots are dead — remove them (and their cache entries).
+    from iceberg_demo_spark.tables.format import forget_metadata_file
+
+    live_meta = {p for s in survivors for p in s.metadata_paths()}
+    dead_meta = {p for s in md.snapshots if s.snapshot_id in expire
+                 for p in s.metadata_paths()}
     for rel in dead_meta - live_meta:
         p = os.path.join(table.location, rel)
         if os.path.exists(p):
             os.remove(p)
-        _fmt._MANIFEST_CACHE.pop(p, None)
-        _fmt._CHANGES_CACHE.pop(p, None)
-        _fmt._MANIFEST_LIST_CACHE.pop(p, None)
+        forget_metadata_file(p)
     md.snapshots = survivors
     for s in md.snapshots:
         if s.parent_id in expire:
@@ -399,31 +385,27 @@ def rewrite_data_files(table: Table, strategy: str = "binpack",
 
 
 def rewrite_manifests(table: Table) -> dict:
-    """Compact the current snapshot's manifest layer
-    (docs/spark-procedures.md:477-512): a manifest-backed snapshot that
-    has accreted many small delta manifests gets ONE consolidated
-    manifest + a fresh manifest list, so scan planning reads one summary
-    instead of N. Inline (small) tables just re-save metadata — nothing
-    to compact. Data files are untouched either way."""
+    """Compact the current snapshot's manifests
+    (docs/spark-procedures.md:477-512): a snapshot that has accreted many
+    small delta manifests gets ONE consolidated manifest, committed as a
+    new ``replace`` snapshot (Iceberg's semantics — committed snapshots
+    never change), so scan planning reads one entry instead of N. The
+    replaced manifests stay referenced by the older snapshots until
+    expire_snapshots drops them. Data files are untouched."""
     table.check_writable("rewrite_manifests")
     snap = table.metadata.current_snapshot()
-    if snap is not None and len(snap.manifests) > 1:
-        from iceberg_demo_spark.tables.format import (
-            write_manifest, write_manifest_list)
+    if snap is None or len(snap.manifests) <= 1:
+        return {"rewritten_manifests_count": 0, "added_manifests_count": 0}
+    from iceberg_demo_spark.tables.format import write_manifest
 
-        n_before = len(snap.manifests)
-        files = snap.files
-        entry = write_manifest(table.location, files,
-                               f"rw{snap.snapshot_id}")
-        snap.manifest_list = write_manifest_list(
-            table.location, [entry], f"rw{snap.snapshot_id}")
-        snap.manifests = [entry]
-        snap._files = files
-        table.metadata.save()
-        return {"rewritten_manifests_count": n_before,
-                "added_manifests_count": 1}
-    table.metadata.save()
-    return {"rewritten_manifests_count": 1, "added_manifests_count": 1}
+    n_before = len(snap.manifests)
+    files = snap.files
+    entry = write_manifest(table.location, files, f"rw{snap.snapshot_id}")
+    table._commit("replace", files, [], [], MAIN_BRANCH,
+                  {"operation-detail": "rewrite_manifests"},
+                  manifests=[entry])
+    return {"rewritten_manifests_count": n_before,
+            "added_manifests_count": 1}
 
 
 def rewrite_position_delete_files(table: Table) -> dict:
@@ -737,24 +719,31 @@ def rewrite_table_path(table: Table, target_location: str,
     """Replication staging (docs/spark-procedures.md:1016-1097): produce a
     copy of the table whose metadata references ``target_location`` so the
     directory can be rsync'd/distcp'd to the target system. Data files are
-    hard-linked when possible (same filesystem), else copied."""
+    hard-linked when possible (same filesystem), else copied, and so are
+    the manifest lists and manifests every staged snapshot references."""
     import shutil as _sh
 
     from iceberg_demo_spark.tables.format import TableMetadata
 
     staging = staging_location or target_location
     os.makedirs(staging, exist_ok=True)
-    head = table.metadata.current_snapshot()
-    n_copied = 0
-    for f in (head.files if head else []):
-        src = os.path.join(table.location, f.path)
-        dst = os.path.join(staging, f.path)
+
+    def stage(rel: str) -> None:
+        src = os.path.join(table.location, rel)
+        dst = os.path.join(staging, rel)
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         try:
             os.link(src, dst)
         except OSError:
             _sh.copy2(src, dst)
-        n_copied += 1
+
+    head = table.metadata.current_snapshot()
+    files = head.files if head else []
+    for f in files:
+        stage(f.path)
+    for rel in {p for s in table.metadata.snapshots
+                for p in s.metadata_paths()}:
+        stage(rel)
     md = TableMetadata.from_json(table.metadata.to_json())
     md.location = target_location
     md.version = 0
@@ -763,5 +752,5 @@ def rewrite_table_path(table: Table, target_location: str,
     staged_md = TableMetadata.from_json(md.to_json())
     staged_md.location = staging
     staged_md.save()
-    return {"staged_files_count": n_copied, "staging_location": staging,
+    return {"staged_files_count": len(files), "staging_location": staging,
             "target_location": target_location}

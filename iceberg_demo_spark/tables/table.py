@@ -791,29 +791,24 @@ class Table:
         return lower, upper, nulls
 
     def _plan_manifests(self, parent: Snapshot | None, files: list[DataFile],
-                        added: list[DataFile],
-                        removed: list[DataFile]) -> list[dict]:
-        """Manifest set for a spilled commit, O(delta) write I/O.
+                        added: list[DataFile], removed: list[DataFile],
+                        tag: str) -> tuple[list[dict], str | None]:
+        """Manifest entries for a commit, O(delta) write I/O, plus the
+        path of its delta manifest (None when nothing was added).
 
-        Carried manifests are reused by reference; manifests containing a
-        removed path are rewritten with survivors only; added files land in
-        one fresh delta manifest. A parent still on the inline model seals
-        its list into a first manifest (one-time O(n) spill). The union is
+        The parent's manifests are carried by reference; manifests that
+        lose a removed path are rewritten with their survivors only; the
+        added files land in one fresh delta manifest. The union is
         verified against ``files`` (the authoritative list every caller
         computes) — any mismatch, e.g. a compaction that rewrote paths in
         place, falls back to one full manifest rather than persisting a
-        wrong file set."""
+        wrong file set; the delta manifest then still records what the
+        commit added."""
         from iceberg_demo_spark.tables.format import load_manifest, write_manifest
 
-        tag = f"s{self.metadata.last_snapshot_id + 1}"
         removed_paths = {f.path for f in removed}
-        parent_manifests = list(parent.manifests) if parent else []
-        if parent is not None and not parent_manifests and parent.files:
-            parent_manifests = [
-                write_manifest(self.location, parent.files,
-                               f"seal{parent.snapshot_id}")]
         entries: list[dict] = []
-        for m in parent_manifests:
+        for m in (parent.manifests if parent else []):
             mfiles = load_manifest(self.location, m["path"])
             if not removed_paths or not any(
                     f.path in removed_paths for f in mfiles):
@@ -822,8 +817,10 @@ class Table:
             survivors = [f for f in mfiles if f.path not in removed_paths]
             if survivors:
                 entries.append(write_manifest(self.location, survivors, tag))
+        delta = None
         if added:
-            entries.append(write_manifest(self.location, added, tag))
+            delta = write_manifest(self.location, added, tag)
+            entries.append(delta)
         expect = {f.path for f in files}
         got: set[str] = set()
         total = 0
@@ -834,51 +831,37 @@ class Table:
         # union alone would hide (a duplicated entry = rows read twice)
         if got != expect or total != len(files):
             entries = [write_manifest(self.location, files, tag)]
-        return entries
+        return entries, delta["path"] if delta is not None else None
 
     def _commit(self, operation: str, files: list[DataFile], added: list[DataFile],
                 removed: list[DataFile], branch: str, summary: dict | None = None,
-                delete_files: list[DeleteFile] | None = None) -> Snapshot:
+                delete_files: list[DeleteFile] | None = None,
+                manifests: list[dict] | None = None) -> Snapshot:
+        """Commit ``files`` as the new head of ``branch``: one delta
+        manifest, one manifest list, one metadata JSON. ``manifests``
+        replaces the planned manifest entries (rewrite_manifests)."""
+        from iceberg_demo_spark.tables.format import write_manifest_list
+
         parent = self.metadata.current_snapshot(branch)
         if delete_files is None:  # inherit the branch head's position deletes
             delete_files = list(parent.delete_files) if parent else []
-        spill_at = int(self.metadata.properties.get(
-            "write.metadata.manifest-min-files", "1000"))
-        manifests = (self._plan_manifests(parent, files, added, removed)
-                     if len(files) > spill_at else None)
-        manifest_list = None
-        if manifests is not None:
-            from iceberg_demo_spark.tables.format import write_manifest_list
-
-            # one small immutable file per snapshot holding the manifest
-            # summaries — the metadata JSON stays O(snapshots) no matter
-            # how many manifests a 10⁷-file table accumulates
-            manifest_list = write_manifest_list(
-                self.location, manifests,
-                f"s{self.metadata.last_snapshot_id + 1}")
-        added_paths = [f.path for f in added]
-        removed_paths = [f.path for f in removed]
-        changes_path = None
-        if len(added_paths) + len(removed_paths) > spill_at:
-            from iceberg_demo_spark.tables.format import write_changes
-            changes_path = write_changes(
-                self.location, added_paths, removed_paths,
-                f"s{self.metadata.last_snapshot_id + 1}")
+        tag = f"s{self.metadata.last_snapshot_id + 1}"
+        manifests, delta = (
+            self._plan_manifests(parent, files, added, removed, tag)
+            if manifests is None else (manifests, None))
+        manifest_list = write_manifest_list(
+            self.location, manifests, delta, [f.path for f in removed], tag)
         snap = Snapshot(
             snapshot_id=self.metadata.next_snapshot_id(),
             parent_id=parent.snapshot_id if parent else None,
             timestamp_ms=now_ms(),
             operation=operation,
             schema_id=self.metadata.current_schema_id,
-            files=files,  # cached in-memory; persisted via manifests if spilled
-            added_files=added_paths,
-            removed_files=removed_paths,
+            manifest_list=manifest_list,
+            location=self.location,
             summary=dict(summary or {}),
             delete_files=delete_files,
-            manifests=manifests,
-            location=self.location,
-            changes_path=changes_path,
-            manifest_list=manifest_list,
+            files=files,  # hot copy; a cold load reads the manifests
         )
         snap.summary.setdefault("added-data-files", str(len(added)))
         snap.summary.setdefault("removed-data-files", str(len(removed)))
@@ -1525,33 +1508,30 @@ class Table:
 
     def _pruned_snapshot_files(self, snap: Snapshot,
                                cond_text: str) -> list[DataFile]:
-        """Partition-pruned file list for a snapshot; on a manifest-backed
-        snapshot not yet materialized, whole manifests whose partition
-        summary proves no match are SKIPPED without loading — scan planning
-        on a spilled table reads O(matching manifests), not O(all)."""
+        """Partition-pruned file list for a snapshot: whole manifests
+        whose partition or column-bound summary proves no match are
+        SKIPPED without loading, so scan planning reads O(matching
+        manifests), not O(all)."""
+        from iceberg_demo_spark.tables import format as _fmt
+
         allowed = self._partition_allowed(cond_text)
         ranges = self._partition_range_cons(cond_text)
         scons = self._stats_cons(cond_text)
         if not allowed and not ranges and not scons:
             return snap.files
-        if snap._files is None and snap.manifests:
-            from iceberg_demo_spark.tables import format as _fmt
-
-            files: list[DataFile] = []
-            for m in snap.manifests:
-                psum = m.get("partitions") or {}
-                if any(col in psum and not (vals & set(psum[col]))
-                       for col, vals in allowed.items()):
-                    continue  # no file in this manifest can match
-                if any(col in psum and not any(
-                        self._passes_ranges(v, cons) for v in psum[col])
-                       for col, cons in ranges.items()):
-                    continue  # every summarized value is out of range
-                if scons and not self._manifest_bounds_admit(m, scons):
-                    continue  # column-bound summary proves no match
-                files.extend(_fmt.load_manifest(self.location, m["path"]))
-        else:
-            files = snap.files
+        files: list[DataFile] = []
+        for m in snap.manifests:
+            psum = m.get("partitions") or {}
+            if any(col in psum and not (vals & set(psum[col]))
+                   for col, vals in allowed.items()):
+                continue  # no file in this manifest can match
+            if any(col in psum and not any(
+                    self._passes_ranges(v, cons) for v in psum[col])
+                   for col, cons in ranges.items()):
+                continue  # every summarized value is out of range
+            if scons and not self._manifest_bounds_admit(m, scons):
+                continue  # column-bound summary proves no match
+            files.extend(_fmt.load_manifest(self.location, m["path"]))
         files = self._apply_partition_filter(files, allowed, ranges)
         if scons:
             files = [f for f in files if self._passes_stats(f, scons)]
@@ -2061,31 +2041,21 @@ class Table:
         return self.spark.createDataFrame(rows, self._ENTRIES_SCHEMA)
 
     def manifests_df(self) -> DataFrame:
-        """The ``manifests`` metadata table. A manifest-backed snapshot
-        (spilled past write.metadata.manifest-min-files) lists its REAL
-        manifest files with their summary counts; an inline snapshot
-        reports the metadata JSON as its single embedded manifest."""
+        """The ``manifests`` metadata table: the current snapshot's
+        manifest files with their size and, per manifest, how many of its
+        files that snapshot added and how many it carried over."""
+        from iceberg_demo_spark.tables.format import load_manifest
+
         snap = self.metadata.current_snapshot()
         rows = []
-        if snap is not None and snap.manifests:
-            added = set(snap.added_files)
-            for m in snap.manifests:
-                ap = os.path.join(self.location, m["path"])
-                length = os.path.getsize(ap) if os.path.exists(ap) else 0
-                from iceberg_demo_spark.tables.format import load_manifest
-                mfiles = load_manifest(self.location, m["path"])
-                n_added = sum(1 for f in mfiles if f.path in added)
-                rows.append((m["path"], length, 0, snap.snapshot_id,
-                             n_added, m["n_files"] - n_added, 0))
-        elif snap is not None:
-            path = os.path.join("metadata", f"v{self.metadata.version}.metadata.json")
-            ap = os.path.join(self.location, path)
+        added = set(snap.added_files) if snap is not None else set()
+        for m in (snap.manifests if snap is not None else []):
+            ap = os.path.join(self.location, m["path"])
             length = os.path.getsize(ap) if os.path.exists(ap) else 0
-            rows.append((path, length, 0, snap.snapshot_id,
-                         len(snap.added_files),
-                         len(snap.files) - sum(1 for f in snap.files
-                                               if f.path in set(snap.added_files)),
-                         len(snap.removed_files)))
+            mfiles = load_manifest(self.location, m["path"])
+            n_added = sum(1 for f in mfiles if f.path in added)
+            rows.append((m["path"], length, 0, snap.snapshot_id,
+                         n_added, m["n_files"] - n_added, 0))
         return self.spark.createDataFrame(
             rows,
             "path string, length bigint, partition_spec_id int, "

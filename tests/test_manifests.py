@@ -1,7 +1,7 @@
-"""Manifest-layer metadata (round 5): past write.metadata.manifest-min-files
-the snapshot file list spills to immutable manifest files, keeping commit
-I/O and metadata-JSON size O(delta) — the growth point format.py's scale
-note named (production Iceberg's manifest design, simplified).
+"""Manifest-layer metadata: every snapshot stores its file list in
+immutable manifests behind one manifest list, keeping commit I/O O(delta)
+and the metadata JSON O(snapshots) — production Iceberg's manifest design,
+simplified.
 
 Synthetic DataFile entries drive the metadata layer directly (no parquet
 writes), so a 10^5-file table commits in bounded time/memory.
@@ -48,7 +48,7 @@ def test_100k_file_commit_is_bounded_and_incremental(catalog):
     first_commit_s = time.time() - t0
 
     snap1 = t.metadata.current_snapshot()
-    assert snap1.manifests, "100k-file commit must spill to manifests"
+    assert snap1.manifests, "100k-file commit must write manifests"
     assert snap1.n_data_files == 100_000
     # metadata JSON carries manifest summaries, not 100k file entries
     assert _meta_json_bytes(t) < 64 * 1024
@@ -74,9 +74,7 @@ def test_100k_file_commit_is_bounded_and_incremental(catalog):
 
 
 def test_removal_rewrites_only_affected_manifests(catalog):
-    t = catalog.create_table(
-        "db.rm", "id bigint",
-        properties={"write.metadata.manifest-min-files": "100"})
+    t = catalog.create_table("db.rm", "id bigint")
     base = _mk_files(0, 500)
     t._commit("append", base, base, [], "main")
     extra = _mk_files(500, 50)
@@ -96,9 +94,7 @@ def test_removal_rewrites_only_affected_manifests(catalog):
 
 
 def test_manifest_backed_table_reloads_from_disk(catalog):
-    t = catalog.create_table(
-        "db.reload", "id bigint",
-        properties={"write.metadata.manifest-min-files": "100"})
+    t = catalog.create_table("db.reload", "id bigint")
     base = _mk_files(0, 250)
     t._commit("append", base, base, [], "main")
     # cold reload (fresh metadata object, lazy manifest load)
@@ -110,22 +106,8 @@ def test_manifest_backed_table_reloads_from_disk(catalog):
     assert {f.path for f in snap.files} == {f.path for f in base}
 
 
-def test_inline_stays_inline_below_threshold(catalog):
-    t = catalog.create_table("db.small", "id bigint")
-    files = _mk_files(0, 50)
-    t._commit("append", files, files, [], "main")
-    snap = t.metadata.current_snapshot()
-    assert not snap.manifests
-    with open(os.path.join(t.location, "metadata",
-                           f"v{t.metadata.version}.metadata.json")) as fh:
-        doc = json.load(fh)
-    assert len(doc["snapshots"][-1]["files"]) == 50
-
-
 def test_manifests_metadata_table_lists_real_manifests(catalog):
-    t = catalog.create_table(
-        "db.mt", "id bigint",
-        properties={"write.metadata.manifest-min-files": "100"})
+    t = catalog.create_table("db.mt", "id bigint")
     base = _mk_files(0, 150)
     t._commit("append", base, base, [], "main")
     extra = _mk_files(150, 20)
@@ -142,19 +124,15 @@ def test_manifests_metadata_table_lists_real_manifests(catalog):
 
 
 def test_mixed_history_time_travel_across_spill(catalog):
-    """A table whose early snapshots are inline and later ones
-    manifest-backed time-travels correctly across the boundary."""
-    t = catalog.create_table(
-        "db.mix", "id bigint",
-        properties={"write.metadata.manifest-min-files": "100"})
+    """A cold reload time-travels to a small ancestor of a large head."""
+    t = catalog.create_table("db.mix", "id bigint")
     small = _mk_files(0, 10)
     t._commit("append", small, small, [], "main")
     s1 = t.metadata.current_snapshot().snapshot_id
     big = _mk_files(10, 200)
     t._commit("append", small + big, big, [], "main")
     m = TableMetadata.load(t.location)
-    assert len(m.snapshot_by_id(s1).files) == 10  # inline ancestor intact
-    assert not m.snapshot_by_id(s1).manifests
+    assert len(m.snapshot_by_id(s1).files) == 10  # ancestor intact
     head = m.current_snapshot()
     assert head.manifests and head.n_data_files == 210
 
@@ -162,9 +140,7 @@ def test_mixed_history_time_travel_across_spill(catalog):
 def test_expire_snapshots_cleans_dead_manifests(catalog):
     from iceberg_demo_spark.tables import procedures as proc
 
-    t = catalog.create_table(
-        "db.exp", "id bigint",
-        properties={"write.metadata.manifest-min-files": "100"})
+    t = catalog.create_table("db.exp", "id bigint")
     base = _mk_files(0, 300)
     t._commit("append", base, base, [], "main")
     # overwrite everything: snapshot 2's manifest replaces snapshot 1's
@@ -213,14 +189,13 @@ def test_scan_where_prunes_partition_files(catalog):
 
 
 def test_scan_where_skips_whole_manifests(catalog, monkeypatch):
-    """On a spilled table, a partition-aligned scan loads only manifests
-    whose partition summary can match — the others are never opened."""
+    """A partition-aligned scan loads only manifests whose partition
+    summary can match — the others are never opened."""
     from iceberg_demo_spark.tables import format as fmt
 
     t = catalog.create_table(
         "db.msk", "id bigint, cat string",
-        partition_by=[("cat",)],
-        properties={"write.metadata.manifest-min-files": "1"})
+        partition_by=[("cat",)])
     a = catalog.spark.createDataFrame(
         [(i, "x") for i in range(40)], schema=t.schema())
     b = catalog.spark.createDataFrame(
@@ -251,15 +226,13 @@ def test_scan_where_skips_whole_manifests(catalog, monkeypatch):
 
 
 def test_randomized_commit_sequences_match_inline_shadow(catalog):
-    """Randomized appends/deletes/overwrites on a low-threshold (spilling)
-    table: after every commit, the manifest-backed file set equals a
-    plain-python shadow model, both hot and after a cold reload."""
+    """Randomized appends/deletes/overwrites: after every commit, the
+    manifest-backed file set equals a plain-python shadow model, both hot
+    and after a cold reload."""
     import random
 
     rng = random.Random(51)
-    t = catalog.create_table(
-        "db.rand", "id bigint",
-        properties={"write.metadata.manifest-min-files": "20"})
+    t = catalog.create_table("db.rand", "id bigint")
     shadow: dict[str, DataFile] = {}
     next_id = 0
     for step in range(30):
@@ -302,9 +275,7 @@ def test_plan_manifests_falls_back_on_duplicate_added_paths(catalog):
     current caller does, but cherry-pick-style flows could), the union
     set-check alone would hide the duplicate; the count check must force
     the single-full-manifest fallback so no file is listed twice."""
-    t = catalog.create_table(
-        "db.dup", "id bigint",
-        properties={"write.metadata.manifest-min-files": "50"})
+    t = catalog.create_table("db.dup", "id bigint")
     base = _mk_files(0, 120)
     t._commit("append", base, base, [], "main")
     # pathological commit: re-adds 10 files already present
@@ -319,23 +290,21 @@ def test_plan_manifests_falls_back_on_duplicate_added_paths(catalog):
 
 
 def test_branch_commits_on_spilled_table_stay_isolated(catalog):
-    t = catalog.create_table(
-        "db.br", "id bigint",
-        properties={"write.metadata.manifest-min-files": "100"})
+    t = catalog.create_table("db.br", "id bigint")
     base = _mk_files(0, 200)
     t._commit("append", base, base, [], "main")
     head = t.metadata.current_snapshot().snapshot_id
     t.metadata.refs["dev"] = {"snapshot_id": head, "type": "branch"}
     extra = _mk_files(200, 150)
     t._commit("append", base + extra, extra, [], "dev")
-    # main untouched; dev extended; both manifest-backed and disjoint heads
+    # main untouched; dev extended; distinct heads
     cold = TableMetadata.load(t.location)
     main_files = {f.path for f in cold.current_snapshot("main").files}
     dev_files = {f.path for f in cold.current_snapshot("dev").files}
     assert len(main_files) == 200 and len(dev_files) == 350
     assert main_files < dev_files
     assert cold.current_snapshot("dev").manifests
-    # the dev commit reused main's sealed/base manifests by reference
+    # the dev commit reused main's manifests by reference
     main_m = {m["path"] for m in cold.current_snapshot("main").manifests}
     dev_m = {m["path"] for m in cold.current_snapshot("dev").manifests}
     assert main_m <= dev_m
@@ -525,8 +494,7 @@ def test_million_file_table_metadata_stays_o_snapshots(catalog, monkeypatch):
         os.path.join(t.location, last["manifest_list"])) < 16 * 1024
 
     # cold reload: pruned planning loads exactly ONE manifest
-    fmt._MANIFEST_CACHE.clear()
-    fmt._MANIFEST_LIST_CACHE.clear()
+    fmt._METADATA_CACHE.clear()
     cold = catalog.load_table("db.huge")
     csnap = cold.metadata.current_snapshot()
     loaded = []
@@ -567,6 +535,107 @@ def test_rewrite_manifests_compacts_spilled_snapshot(catalog):
     assert {f.path for f in s2.files} == {f.path for f in files}
 
 
+def test_rewrite_manifests_commits_replace_and_expires_old_layer(catalog):
+    """rewrite_manifests commits a new ``replace`` snapshot instead of
+    editing the head in place, so expiring the old head deletes the
+    manifest list and delta manifest it replaced."""
+    from iceberg_demo_spark.tables import procedures as proc
+
+    t = catalog.create_table("db.rwx", "id bigint")
+    files: list[DataFile] = []
+    for b in range(3):
+        batch = _mk_files(b * 10, 10)
+        files = files + batch
+        t._commit("append", files, batch, [], "main")
+    old = t.metadata.current_snapshot()
+    old_list = old.manifest_list
+    old_delta = old.manifests[-1]["path"]
+    proc.rewrite_manifests(t)
+    head = t.metadata.current_snapshot()
+    assert head.operation == "replace" and head.parent_id == old.snapshot_id
+    assert old.manifest_list == old_list  # committed snapshot unchanged
+    assert head.added_files == [] and head.removed_files == []
+    proc.expire_snapshots(t, older_than_ms=now_ms() + 10_000, retain_last=1)
+    left = _manifest_names(t)
+    assert os.path.basename(old_list) not in left
+    assert os.path.basename(old_delta) not in left
+    cold = TableMetadata.load(t.location).current_snapshot()
+    assert {f.path for f in cold.files} == {f.path for f in files}
+
+
+def test_metadata_json_size_independent_of_files_per_commit(catalog):
+    """The metadata JSON holds snapshot headers only: 20 commits of 1
+    file and 20 commits of 200 files leave JSONs of the same size, up to
+    the digits of the counts in each summary."""
+    sizes = []
+    for name, per_commit in (("db.one", 1), ("db.many", 200)):
+        t = catalog.create_table(name, "id bigint")
+        files: list[DataFile] = []
+        for c in range(20):
+            batch = _mk_files(c * per_commit, per_commit)
+            files = files + batch
+            t._commit("append", files, batch, [], "main")
+        with open(os.path.join(t.location, "metadata",
+                               f"v{t.metadata.version}.metadata.json")) as fh:
+            doc = json.load(fh)
+        for snap in doc["snapshots"]:
+            assert not {"files", "manifests", "added_files",
+                        "removed_files"} & set(snap)
+            assert "manifest_list" in snap
+        sizes.append(_meta_json_bytes(t))
+    # per snapshot, "added-data-files" and "total-records" differ by at
+    # most 2 + 3 digits, and the table names by 1 character
+    assert abs(sizes[0] - sizes[1]) <= 20 * 5 + 8, sizes
+
+
+def test_metadata_cache_bound_holds(catalog, monkeypatch):
+    """Loaded manifests and manifest lists share one LRU bounded in
+    entries: commits and concurrent cold loads never overshoot it, and an
+    evicted manifest re-reads from disk unchanged."""
+    import sys
+    import threading
+
+    from iceberg_demo_spark.tables import format as fmt
+
+    bound = 8
+    monkeypatch.setattr(fmt, "METADATA_CACHE_SIZE", bound)
+    monkeypatch.setattr(fmt, "_METADATA_CACHE", type(fmt._METADATA_CACHE)())
+    t = catalog.create_table("db.lru", "id bigint")
+    files: list[DataFile] = []
+    for c in range(3 * bound):
+        batch = _mk_files(c * 2, 2)
+        files = files + batch
+        t._commit("append", files, batch, [], "main")
+        assert len(fmt._METADATA_CACHE) <= bound
+    cold = TableMetadata.load(t.location)
+    errors = []
+
+    def work():
+        try:
+            for s in cold.snapshots:
+                got = [f for m in s.manifests
+                       for f in fmt.load_manifest(t.location, m["path"])]
+                assert len(got) == s.n_data_files
+        except Exception as exc:  # noqa: BLE001 - surfaced by the assert
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    assert len(fmt._METADATA_CACHE) <= bound
+    assert {f.path for f in cold.current_snapshot().files} == \
+        {f.path for f in files}
+
+
 def test_stats_pruned_planning_budget_100k_files(catalog, monkeypatch):
     """Round-7 stretch (VERDICT r6 #8): the per-file column-stats path
     must not become the next driver-side ceiling. 10 commits x 10k files
@@ -595,8 +664,7 @@ def test_stats_pruned_planning_budget_100k_files(catalog, monkeypatch):
         t._commit("append", files, batch, [], "main")
     assert len(t.metadata.current_snapshot().manifests) == 10
 
-    fmt._MANIFEST_CACHE.clear()
-    fmt._MANIFEST_LIST_CACHE.clear()
+    fmt._METADATA_CACHE.clear()
     cold = catalog.load_table("db.statbudget")
     snap = cold.metadata.current_snapshot()
     loaded = []

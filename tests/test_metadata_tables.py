@@ -45,14 +45,19 @@ def test_entries_statuses(catalog):
 
 
 def test_manifests_df_shape(catalog):
+    """One manifest per append: the first append's manifest is carried
+    (all existing), the second's is the head's delta (all added)."""
     t = _sample(catalog)
     head = t.metadata.current_snapshot()
     m = t.manifests_df().collect()
-    assert len(m) == 1
-    assert m[0]["added_data_files_count"] == len(head.added_files)
-    assert m[0]["existing_data_files_count"] == \
-        len(head.files) - len(head.added_files)
-    assert m[0]["length"] > 0
+    assert len(m) == 2
+    carried, delta = m
+    assert carried["added_data_files_count"] == 0
+    assert carried["existing_data_files_count"] == \
+        len(head.files) - len(head.added_files) > 0
+    assert delta["added_data_files_count"] == len(head.added_files) > 0
+    assert delta["existing_data_files_count"] == 0
+    assert all(r["length"] > 0 for r in m)
 
 
 def test_engine_metadata_table_suffixes(engine):

@@ -136,13 +136,11 @@ def test_string_truncation_upper_bound_still_sound(engine):
 
 
 def test_manifest_level_bounds_skipping(engine):
-    """A spilled (manifest-backed) table skips whole manifests whose
-    bound summary excludes the predicate — without loading them."""
+    """A multi-manifest table skips whole manifests whose bound summary
+    excludes the predicate — without loading them."""
     from iceberg_demo_spark.tables import format as fmt
 
-    t = engine.catalog.create_table(
-        "db.spill", "id bigint, v string",
-        properties={"write.metadata.manifest-min-files": "1"})
+    t = engine.catalog.create_table("db.spill", "id bigint, v string")
     for lo, hi in [(0, 10), (100, 110), (200, 210)]:
         t.append(engine.spark.sql(
             f"SELECT id, concat('v', id) AS v FROM range({lo}, {hi})"
