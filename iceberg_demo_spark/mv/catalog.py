@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, fields
 
 
 @dataclass
@@ -24,15 +24,17 @@ class MaterializedView:
     storage_location: str = ""
     row_count: int = -1
     size_in_bytes: int = -1
-    # incremental-maintenance bookkeeping: the catalog table the defining
-    # query reads and the snapshot it was last synchronized to ("" / -1 when
-    # the query isn't incrementally maintainable)
-    source_table: str = ""
-    source_snapshot_id: int = -1
-    # join-MV bookkeeping: defining-query table ref → [catalog table,
-    # synchronized snapshot id] for EVERY base table ({} for single-table /
-    # non-maintainable views)
+    # incremental-maintenance sync point: defining-query table ref →
+    # [catalog table, synchronized snapshot id] for EVERY base table of an
+    # enrolled view, single-table or join ({} when the query isn't
+    # incrementally maintainable)
     source_snapshots: dict = field(default_factory=dict)
+
+
+#: the keys a persisted view may carry; others (an older catalog's retired
+#: single-table sync fields) are dropped on load — such a view has an empty
+#: sync map, so its next refresh is a full recompute that records it again
+_FIELDS = {f.name for f in fields(MaterializedView)}
 
 
 class MVCatalog:
@@ -45,7 +47,9 @@ class MVCatalog:
         if os.path.exists(self.path):
             with open(self.path) as fh:
                 self._views = {
-                    k: MaterializedView(**v) for k, v in json.load(fh).items()
+                    k: MaterializedView(
+                        **{f: x for f, x in v.items() if f in _FIELDS})
+                    for k, v in json.load(fh).items()
                 }
 
     def _save(self) -> None:

@@ -286,33 +286,6 @@ class MVManager:
                 return c
         return None
 
-    def _maintenance_plan(self, query: str) -> tuple[str, QueryInfo] | None:
-        """(source_catalog_table, parsed query) when the defining query is
-        incrementally maintainable: single catalog-table GROUP BY aggregate,
-        every GROUP BY expr projected plainly, no joins/limit."""
-        try:
-            info = parse_select(query)
-        except ParseError:
-            return None
-        if len(info.base_tables) != 1 or info.joins or info.limit is not None:
-            return None
-        if not info.group_by:
-            return None
-        plain = {e for (fn, e, _a) in info.agg_items() if fn == ""}
-        if set(info.group_by) != plain:
-            return None
-        for fn, _arg, _a in info.agg_items():
-            if fn and fn not in _INCR_FNS:
-                return None
-        src = self._resolve_source(info.base_tables[0])
-        if src is None:
-            return None
-        return src, info
-
-    def _source_snapshot_id(self, source: str) -> int:
-        snap = self.table_catalog.load_table(source).metadata.current_snapshot()
-        return snap.snapshot_id if snap else -1
-
     @staticmethod
     def _require_ancestor(t, snapshot_id: int, ref: str) -> None:
         """The recorded sync snapshot must still be an ancestor of head
@@ -377,16 +350,18 @@ class MVManager:
                     "recompute yields NULL; declare the columns NOT NULL "
                     "or use REFRESH ... INCREMENTAL")
 
-    def _join_maintenance_plan(self, query: str) -> tuple[dict, QueryInfo] | None:
+    def _maintenance_plan(self, query: str) -> tuple[dict, QueryInfo] | None:
         """({table_ref: catalog_table}, parsed query) when the defining query
-        is an incrementally maintainable JOIN aggregate: inner/left equi-joins
-        over distinct catalog tables, GROUP BY with plainly projected keys,
-        agg functions the partial-group strategy can recompute, no limit."""
+        is an incrementally maintainable aggregate over a join tree of n ≥ 1
+        tables: inner/left equi-joins over distinct catalog tables (none
+        for a single-table view, where every join guard below is a no-op),
+        GROUP BY with plainly projected keys, agg functions the
+        partial-group strategy can recompute, no limit."""
         try:
             info = parse_select(query)
         except ParseError:
             return None
-        if len(info.base_tables) < 2 or info.limit is not None:
+        if info.limit is not None:
             return None
         if any("." in ref for ref in info.base_tables):
             # the refresh binds each ref to changelog/state temp views by
@@ -519,9 +494,17 @@ class MVManager:
                         return None
         return sources, info
 
-    def _record_join_sources(self, mv: MaterializedView, sources: dict) -> None:
+    def _record_sources(self, mv: MaterializedView, sources: dict,
+                        heads: dict | None = None) -> None:
+        """Record every source's synchronized snapshot: the ``heads`` a
+        maintenance refresh applied up to, else the source's current
+        head (after a recompute from it; -1 for a source with none)."""
+        if heads is None:
+            heads = {ref: self.table_catalog.load_table(src)
+                     .metadata.current_snapshot()
+                     for ref, src in sources.items()}
         mv.source_snapshots = {
-            ref: [src, self._source_snapshot_id(src)]
+            ref: [src, heads[ref].snapshot_id if heads[ref] else -1]
             for ref, src in sources.items()
         }
 
@@ -531,9 +514,8 @@ class MVManager:
                 return self.mv_catalog.get(name)
             raise ValueError(f"Materialized view {name} already exists")
         plan = self._maintenance_plan(query)
-        jplan = None if plan else self._join_maintenance_plan(query)
         # Bind every referenced view name to the catalog table's CURRENT
-        # snapshot so the recorded source_snapshot_id matches the data the
+        # snapshot so the recorded source snapshots match the data the
         # backing table is built from (and non-enrolled MVs build from
         # head, not a stale registration-time scan).
         self._rebind_sources(query)
@@ -552,11 +534,9 @@ class MVManager:
             storage_location=t.location,
             row_count=sum(f.records for f in snap.files) if snap else 0,
             size_in_bytes=sum(f.bytes for f in snap.files) if snap else 0,
-            source_table=plan[0] if plan else "",
-            source_snapshot_id=self._source_snapshot_id(plan[0]) if plan else -1,
         )
-        if jplan:
-            self._record_join_sources(mv, jplan[0])
+        if plan:
+            self._record_sources(mv, plan[0])
         self.mv_catalog.register(mv)
         return mv
 
@@ -573,43 +553,46 @@ class MVManager:
                 delta: bool = False) -> MaterializedView:
         """REFRESH [INCREMENTAL | DELTA]. The reference accepts INCREMENTAL
         but always recomputes fully (MaterializedViewCommands.scala:150-177,
-        docs/starrocks-mv-features.md:56-58); we go beyond it twice over:
+        docs/starrocks-mv-features.md:56-58); we go beyond it twice over,
+        with ONE path per mode for every enrolled view — a single-table
+        view is the one-table case of the join tree:
 
-        * INCREMENTAL — **delta-driven partial group recompute**: the
-          source table's changelog between the last synchronized snapshot
-          and head yields the touched group keys, only those groups are
-          re-aggregated from the source, and untouched backing rows are
-          carried over. Exact for every aggregate (incl. MIN/MAX/AVG/
-          DISTINCT, which pure +/- delta merging cannot maintain under
-          deletes).
-        * DELTA (VERDICT r10 #8) — **net per-commit delta application**:
-          for SUM/COUNT views carrying a plain COUNT(*), the changelog
-          window itself aggregates to one signed delta row per touched
-          group and ONE keyed MERGE folds the deltas into the backing
-          table. The source is never rescanned — cost is O(changelog),
-          independent of both source and MV size.
+        * INCREMENTAL (``_refresh_incremental``) — **delta-driven partial
+          group recompute**: each changed source's changelog window
+          between its synchronized snapshot and head yields the touched
+          group keys, only those groups are re-aggregated from the
+          sources, and untouched backing rows are carried over. Exact for
+          every aggregate (incl. MIN/MAX/AVG/DISTINCT, which pure +/-
+          delta merging cannot maintain under deletes).
+        * DELTA (``_refresh_delta``, VERDICT r10 #8) — **net per-commit
+          delta application**: for SUM/COUNT views carrying a plain
+          COUNT(*), the changelog windows themselves aggregate to one
+          signed delta row per touched group and ONE keyed MERGE folds
+          the deltas into the backing table. No source is rescanned —
+          cost is O(changelog), independent of both source and MV size.
 
-        Either mode falls back (DELTA → full; INCREMENTAL → full) when the
-        query shape or changelog doesn't allow it; ``last_refresh_mode``
-        records which path actually ran and
-        ``last_refresh_fallback_reason`` why a fallback was taken. Only
-        DELIBERATE refusals (``ParseError``/``ValueError`` raised by the
-        maintenance planners) fall back — any other exception is a real
-        bug in the maintenance path and propagates, instead of silently
-        degrading to a correct-but-O(source) full recompute with no
-        signal (VERDICT r11 #5)."""
+        The sync point is ``MaterializedView.source_snapshots`` (empty for
+        a view no planner enrolls). Either mode falls back (DELTA → full;
+        INCREMENTAL → full) when the query shape or changelog doesn't
+        allow it; ``last_refresh_mode`` records which path actually ran
+        and ``last_refresh_fallback_reason`` why a fallback was taken.
+        Only DELIBERATE refusals (``ParseError``/``ValueError`` raised by
+        the maintenance planners) fall back — any other exception is a
+        real bug in the maintenance path and propagates, instead of
+        silently degrading to a correct-but-O(source) full recompute with
+        no signal (VERDICT r11 #5)."""
         mv = self.mv_catalog.get(name)
         if mv is None:
             raise ValueError(f"Materialized view {name} does not exist")
         self.last_refresh_fallback_reason = None
-        if delta and (mv.source_table or mv.source_snapshots):
+        if delta and mv.source_snapshots:
             try:
-                out = self._refresh_changelog_delta(mv)
+                out = self._refresh_delta(mv)
                 self.last_refresh_mode = "delta"
                 return out
             except (ParseError, ValueError) as e:
                 self.last_refresh_fallback_reason = f"delta refused: {e}"
-        if incremental and (mv.source_table or mv.source_snapshots):
+        if incremental and mv.source_snapshots:
             try:
                 out = self._refresh_incremental(mv)
                 self.last_refresh_mode = "incremental"
@@ -622,92 +605,6 @@ class MVManager:
         out = self._refresh_full(mv)
         self.last_refresh_mode = "full"
         return out
-
-    def _refresh_changelog_delta(self, mv: MaterializedView) -> MaterializedView:
-        """NET per-commit delta maintenance (VERDICT r10 #8 — the
-        StarRocks roadmap composition the reference stubs as full
-        recompute): the view must be a single-table GROUP BY whose
-        aggregates are all SELF-MAINTAINABLE under insert AND delete —
-        SUM and COUNT only (MIN/MAX/AVG/DISTINCT cannot be maintained
-        from deltas under deletes) — and must carry a plain COUNT(*)
-        column so vanished groups are detectable. The changelog window
-        (INSERT/UPDATE_AFTER rows signed +1, DELETE/UPDATE_BEFORE −1)
-        aggregates to one delta row per touched group; a single keyed
-        MERGE then adds deltas into matched groups, deletes groups whose
-        count reaches zero, and inserts groups appearing for the first
-        time. Textbook caveat (documented, not hidden): SUM columns over
-        NULL-admitting expressions can be driven to a spurious 0 when
-        deletes remove every non-NULL contributor while NULL rows remain
-        — restoring SQL's NULL would need a per-column non-null count in
-        the view schema; SUM over non-null expressions is exact.
-
-        Scale shape: the ONLY data read is the changelog window itself;
-        the MERGE touches only files holding changed groups. At 100 TB
-        this is the MV-maintenance cost model a fact-table owner wants:
-        O(day's commits), not O(fact table) and not O(MV)."""
-        from iceberg_demo_spark.tables import procedures as proc
-
-        plan = self._maintenance_plan(mv.query)
-        if plan is None:
-            return self._refresh_changelog_delta_join(mv)
-        source, info = plan
-        items = info.agg_items()
-        backing = self.table_catalog.load_table(mv.backing_table)
-        backing_cols = [f.name for f in backing.metadata.schema]
-        avg_derived, sum_guards = self._delta_companions(
-            items, backing_cols, backing)
-        cnt_col = self._delta_cnt_col(items, backing_cols, avg_derived)
-        t = self.table_catalog.load_table(source)
-        head = t.metadata.current_snapshot()
-        if head is None or mv.source_snapshot_id < 0:
-            raise ValueError("no synchronized snapshot recorded")
-        if head.snapshot_id == mv.source_snapshot_id:
-            return self._finish_refresh(mv, backing)  # already in sync
-        self._require_ancestor(t, mv.source_snapshot_id, source)
-        self._require_non_null_sums(
-            items, backing_cols,
-            {f.name.lower(): f.nullable for f in t.schema().fields},
-            guarded=sum_guards)
-        cl = proc.create_changelog_view(
-            t, f"__mv_cldelta_{mv.name.lower().replace('.', '_')}",
-            start_snapshot_id=mv.source_snapshot_id,
-            end_snapshot_id=head.snapshot_id)
-        if info.where:
-            cl = cl.filter(" AND ".join(f"({c})" for c in info.where))
-        # MIN/MAX enroll only when the (view-scoped) window is pure
-        # inserts — checked AFTER the WHERE filter: a delete the view's
-        # predicate never admits cannot retract its extremum
-        self._require_insert_only_for_minmax(items, cl)
-        sign = F.when(F.col("_change_type").isin("INSERT", "UPDATE_AFTER"),
-                      F.lit(1)).otherwise(F.lit(-1))
-        key_cols = [(backing_cols[i], expr)
-                    for i, (fn, expr, _a) in enumerate(items) if fn == ""]
-        aggs = []
-        for i, (fn, expr, _a) in enumerate(items):
-            col = backing_cols[i]
-            if fn == "" or col in avg_derived:
-                continue  # avg is recomputed from its merged companions
-            if fn == "count" and expr.strip() in ("*", "1"):
-                aggs.append(F.sum(sign).cast("bigint").alias(col))
-            elif fn == "count":
-                aggs.append(F.sum(F.when(F.expr(expr).isNotNull(), sign)
-                                  .otherwise(F.lit(0)))
-                            .cast("bigint").alias(col))
-            elif fn in ("min", "max"):
-                # insert-only by the check above: the window extremum
-                aggs.append(getattr(F, fn)(F.expr(expr)).alias(col))
-            else:  # sum: NULL deltas (all-NULL contributors) add nothing
-                aggs.append(F.sum(sign * F.expr(expr)).alias(col))
-        delta_df = cl.groupBy(
-            *[F.expr(e).alias(n) for n, e in key_cols]).agg(*aggs)
-        self._merge_group_deltas(
-            backing, backing_cols, items, [n for n, _e in key_cols],
-            cnt_col, delta_df,
-            stamp=self._window_stamp(
-                [(source, mv.source_snapshot_id, head.snapshot_id)]),
-            avg_derived=avg_derived, sum_guards=sum_guards)
-        mv.source_snapshot_id = head.snapshot_id
-        return self._finish_refresh(mv, backing)
 
     @staticmethod
     def _delta_cnt_col(items, backing_cols: list[str],
@@ -734,25 +631,42 @@ class MVManager:
     # The MERGE and the catalog's source-snapshot advance are two commits;
     # a crash between them would re-apply the same changelog window on the
     # next refresh — silent double counting, exactly the failure mode the
-    # streaming bloom guard's epoch stamps close. Stamp the applied window
-    # on the backing table's merge snapshot; a re-run of the SAME window
-    # skips the fold and just re-advances the catalog.
+    # streaming bloom guard's epoch stamps close. The applied window is
+    # stamped into the summary of the MERGE's own snapshot (one commit, so
+    # no crash can separate fold and stamp); the next refresh resumes the
+    # catalog's sync points from the stamp, so it neither re-folds the
+    # window (same head: nothing left to fold) nor folds it again as part
+    # of a longer one (the source committed again before the retry). A
+    # MERGE that changes nothing commits nothing: re-folding its empty
+    # delta is a no-op, so it needs no stamp.
 
     _DELTA_STAMP = "mv-delta-window"
 
     def _window_stamp(self, windows: list[tuple[str, int, int]]) -> str:
         return ";".join(f"{ref}:{a}->{b}" for ref, a, b in windows)
 
-    def _window_already_applied(self, backing, stamp: str) -> bool:
+    def _resume_from_stamp(self, backing, rec: dict) -> dict:
+        """The sync points ``rec`` ({ref: [table, snapshot id]}) moved past
+        the window the backing head already folded: when its stamp's
+        every ``ref:a->b`` still starts at the recorded ``a``, the catalog
+        advance was lost after the MERGE committed, and ``b`` is where
+        the next window starts. Any other stamp (the catalog did
+        advance, or another refresh rewrote the backing) leaves ``rec``
+        as it is."""
         snap = backing.metadata.current_snapshot()
-        return (snap is not None
-                and snap.summary.get(self._DELTA_STAMP) == stamp)
-
-    def _stamp_delta_window(self, backing, stamp: str) -> None:
-        snap = backing.metadata.current_snapshot()
-        if snap is not None:
-            snap.summary[self._DELTA_STAMP] = stamp
-            backing.metadata.save()
+        stamp = snap.summary.get(self._DELTA_STAMP) if snap else None
+        if not stamp:
+            return rec
+        windows = {}
+        for part in stamp.split(";"):
+            ref, _, span = part.partition(":")
+            a, _, b = span.partition("->")
+            windows[ref] = (int(a), int(b))
+        if any(ref not in rec or rec[ref][1] != a
+               for ref, (a, _b) in windows.items()):
+            return rec
+        return {ref: [src, windows[ref][1] if ref in windows else sid]
+                for ref, (src, sid) in rec.items()}
 
     # -- companion-column delta derivations (round 12) ---------------------
     #
@@ -771,18 +685,21 @@ class MVManager:
         return re.sub(r"\s+", "", e.strip().lower())
 
     @staticmethod
-    def _require_insert_only_for_minmax(items, cl: DataFrame) -> None:
+    def _require_insert_only_for_minmax(items, rows: DataFrame,
+                                        cnt_col: str) -> None:
         """MIN/MAX delta-fold is valid ONLY for insert-only windows
         (round 12): under pure inserts a group's extremum can move in
         one direction only, so least/greatest merging is exact; a
-        single delete/update image can retract the stored extremum,
+        single retracted contribution can retract the stored extremum,
         which no delta can repair — refuse (ParseError → refresh()
         falls back; INCREMENTAL's touched-group recompute is exact).
-        One LIMIT-1 probe over the window, not a full count."""
+        Checked on the signed term ``rows`` — after the WHERE and the
+        joins, so a delete the view never admits cannot refuse it — by
+        one LIMIT-1 probe for a negative COUNT(*) contribution, not a
+        full count."""
         if not any(fn in ("min", "max") for fn, _e, _a in items):
             return
-        neg = cl.filter(F.col("_change_type")
-                        .isin("DELETE", "UPDATE_BEFORE")).limit(1).count()
+        neg = rows.filter(F.col(cnt_col) < 0).limit(1).count()
         if neg:
             raise ParseError(
                 "not delta-maintainable: MIN/MAX with deletes/updates "
@@ -821,23 +738,21 @@ class MVManager:
 
     def _merge_group_deltas(self, backing, backing_cols: list[str],
                             items, key_names: list[str], cnt_col: str,
-                            delta_df: DataFrame,
-                            stamp: str | None = None,
+                            delta_df: DataFrame, stamp: str,
                             avg_derived: dict | None = None,
                             sum_guards: dict | None = None) -> None:
         """Fold one signed delta row per touched group into the backing
-        table (shared by the single-table and join delta paths):
-        update-add on matched groups, delete when COUNT(*) reaches
-        zero, insert brand-new groups, skip insert-then-delete
-        zero-nets. With ``stamp``, an already-applied window (the crash
-        replay between MERGE and catalog advance) is skipped and the
-        fresh fold's snapshot is stamped. ``avg_derived`` columns are
-        absent from ``delta_df`` and recomputed from their merged
-        SUM/COUNT companions; ``sum_guards`` columns restore NULL when
-        their companion COUNT reaches zero (all SET expressions read
-        pre-update t values, so companion reads are consistent)."""
-        if stamp is not None and self._window_already_applied(backing, stamp):
-            return
+        table: update-add on matched groups, delete when COUNT(*)
+        reaches zero, insert brand-new groups, skip insert-then-delete
+        zero-nets. An already-applied window ``stamp`` (the crash replay
+        between MERGE and catalog advance) resumes past it
+        (``_resume_from_stamp``); the fold writes ``stamp`` in the
+        MERGE's own snapshot summary.
+        ``avg_derived`` columns are absent from ``delta_df`` and
+        recomputed from their merged SUM/COUNT companions;
+        ``sum_guards`` columns restore NULL when their companion COUNT
+        reaches zero (all SET expressions read pre-update t values, so
+        companion reads are consistent)."""
         avg_derived = avg_derived or {}
         sum_guards = sum_guards or {}
         updates = {}
@@ -890,14 +805,16 @@ class MVManager:
                               **inserts}}],
             # delta_df is one row per group key by construction
             check_cardinality=False,
+            summary={self._DELTA_STAMP: stamp},
         )
-        if stamp is not None:
-            self._stamp_delta_window(backing, stamp)
 
-    def _refresh_changelog_delta_join(self, mv: MaterializedView,
-                                      ) -> MaterializedView:
-        """The JOIN extension of DELTA maintenance — TWO-SIDED since
-        round 12 (VERDICT r11 #3). The multiset identity
+    def _refresh_delta(self, mv: MaterializedView) -> MaterializedView:
+        """NET per-commit delta maintenance (VERDICT r10 #8 — the StarRocks
+        roadmap composition the reference stubs as full recompute) over a
+        join tree of n ≥ 1 tables, TWO-SIDED since round 12 (VERDICT r11
+        #3). The view's aggregates must be SUM/COUNT (AVG via SUM + COUNT
+        companions, MIN/MAX for insert-only windows) with a plain COUNT(*)
+        column so vanished groups are detectable. The multiset identity
 
             Δ(T₁⋈…⋈Tₙ) = Σᵢ T₁ⁿᵉʷ⋈…⋈Tᵢ₋₁ⁿᵉʷ ⋈ ΔTᵢ ⋈ Tᵢ₊₁ᵒˡᵈ⋈…⋈Tₙᵒˡᵈ
 
@@ -908,7 +825,9 @@ class MVManager:
         consistent snapshots by construction, no table rescanned beyond
         its window. The union of the terms' signed row contributions
         aggregates to the per-group delta and ONE keyed MERGE folds it
-        in. Fact-only windows reduce to the round-11 one-term shape.
+        in. Fact-only windows — and every window of a single-table view —
+        reduce to the one-term shape: the signed changelog rows
+        themselves (INSERT/UPDATE_AFTER +1, DELETE/UPDATE_BEFORE −1).
 
         LEFT join trees are admitted only for FACT-ONLY windows: a
         preserved-side fact image null-extends exactly as its original
@@ -916,18 +835,19 @@ class MVManager:
         fact rows it (un)matches, which the telescoping terms cannot
         see — those windows REFUSE and refresh() falls back
         (INCREMENTAL's touched-group recompute handles them exactly).
-        Same SUM/COUNT + plain-COUNT(*) restriction as the single-table
-        path, plus the NULL-able SUM-argument refusal (ADVICE r11 low;
-        a LEFT join's nullable side counts as nullable regardless of
-        declared schema). Every changed table's recorded snapshot must
-        still be a head ancestor (ADVICE r11 medium).
+        SUM arguments that may evaluate to NULL refuse (ADVICE r11 low: a
+        window deleting every non-NULL contributor would leave a spurious
+        0 where full recompute yields NULL; a LEFT join's nullable side
+        counts as nullable regardless of declared schema) unless a COUNT
+        companion guards them. Every changed table's recorded snapshot
+        must still be a head ancestor (ADVICE r11 medium).
 
         Scale shape: one changelog-sized join per changed table against
         broadcast-able pinned states + one keyed MERGE — O(window
         commits), never O(fact)."""
         from iceberg_demo_spark.tables import procedures as proc
 
-        plan = self._join_maintenance_plan(mv.query)
+        plan = self._maintenance_plan(mv.query)
         if plan is None:
             raise ParseError("not delta-maintainable: shape")
         sources, info = plan
@@ -948,10 +868,12 @@ class MVManager:
         rec = mv.source_snapshots
         if not rec or set(rec) != set(tables):
             raise ValueError("no synchronized snapshots recorded")
+        rec = self._resume_from_stamp(backing, rec)
         order = list(info.base_tables)
         changed = [ref for ref in order
                    if heads[ref].snapshot_id != rec[ref][1]]
         if not changed:
+            self._record_sources(mv, sources, heads)
             return self._finish_refresh(mv, backing)
         fact = order[0]
         if changed != [fact] and any(j["type"] != "inner"
@@ -1008,8 +930,8 @@ class MVManager:
                         f"{delta_ref}._sign ELSE 0 END AS BIGINT) "
                         f"AS {col}")
                 elif fn in ("min", "max"):
-                    # insert-only windows only (validated per changed
-                    # table): every image is a positive contribution
+                    # insert-only windows only (validated on the term
+                    # rows): every image is a positive contribution
                     sel.append(f"({expr}) AS {col}")
                 else:
                     sel.append(f"{delta_ref}._sign * ({expr}) AS {col}")
@@ -1029,8 +951,6 @@ class MVManager:
                     tables[ref], f"{vbase}_{idx}",
                     start_snapshot_id=rec[ref][1],
                     end_snapshot_id=heads[ref].snapshot_id)
-                # raw per-table window (pre-WHERE) — conservative-sound
-                self._require_insert_only_for_minmax(items, cl)
                 (cl.withColumn("_sign", sign).drop(*meta_cols)
                  .createOrReplaceTempView(ref))
                 for jdx, other in enumerate(order):
@@ -1046,6 +966,7 @@ class MVManager:
             rows = terms[0]
             for extra in terms[1:]:
                 rows = rows.unionAll(extra)
+            self._require_insert_only_for_minmax(items, rows, cnt_col)
             aggs = []
             for i, (fn, _e, _a) in enumerate(items):
                 col = backing_cols[i]
@@ -1073,7 +994,7 @@ class MVManager:
             # low: future callers would inherit a corrupted binding)
             for ref, t in tables.items():
                 t.scan().createOrReplaceTempView(ref)
-        self._record_join_sources(mv, sources)
+        self._record_sources(mv, sources, heads)
         return self._finish_refresh(mv, backing)
 
     def _rebind_sources(self, query: str) -> None:
@@ -1097,16 +1018,12 @@ class MVManager:
 
     def _refresh_full(self, mv: MaterializedView) -> MaterializedView:
         plan = self._maintenance_plan(mv.query)
-        jplan = None if plan else self._join_maintenance_plan(mv.query)
         self._rebind_sources(mv.query)
         df = self._aliased(self._run_query(mv.query), mv.query)
         t = self.table_catalog.load_table(mv.backing_table)
         t.overwrite_all(df)
         if plan:
-            mv.source_table = plan[0]
-            mv.source_snapshot_id = self._source_snapshot_id(plan[0])
-        if jplan:
-            self._record_join_sources(mv, jplan[0])
+            self._record_sources(mv, plan[0])
         return self._finish_refresh(mv, t)
 
     def _finish_refresh(self, mv: MaterializedView, t) -> MaterializedView:
@@ -1116,110 +1033,6 @@ class MVManager:
         mv.size_in_bytes = sum(f.bytes for f in snap.files) if snap else 0
         self.mv_catalog.update(mv)
         return mv
-
-    def _refresh_incremental(self, mv: MaterializedView) -> MaterializedView:
-        """Partial group recompute (see refresh docstring). Scale notes: the
-        changelog carries only changed rows; the recompute scan is restricted
-        by an IN-list on touched keys when they're few (collected driver-side
-        → parquet min/max + partition pruning applies) or a broadcast
-        semi-join otherwise; the backing write is a keyed MERGE that only
-        rewrites files containing touched groups, so refresh cost is
-        O(changed groups), never O(|MV|)."""
-        plan = self._maintenance_plan(mv.query)
-        if plan is None:
-            return self._refresh_incremental_join(mv)
-        source, info = plan
-        from iceberg_demo_spark.tables import procedures as proc
-
-        t = self.table_catalog.load_table(source)
-        head = t.metadata.current_snapshot()
-        if head is None or mv.source_snapshot_id < 0:
-            raise ValueError("no synchronized snapshot recorded")
-        backing = self.table_catalog.load_table(mv.backing_table)
-        if head.snapshot_id == mv.source_snapshot_id:
-            return self._finish_refresh(mv, backing)  # already in sync
-
-        # 1. touched group keys from the changelog window
-        cl = proc.create_changelog_view(
-            t, f"__mv_delta_{mv.name.lower().replace('.', '_')}",
-            start_snapshot_id=mv.source_snapshot_id,
-            end_snapshot_id=head.snapshot_id)
-        where = " AND ".join(f"({c})" for c in info.where) if info.where else None
-        if where is not None:
-            cl = cl.filter(where)
-        backing_cols = [f.name for f in backing.metadata.schema]
-        items = info.agg_items()  # aligned with backing_cols by position
-        key_cols = [(backing_cols[i], expr)
-                    for i, (fn, expr, _a) in enumerate(items) if fn == ""]
-        touched = cl.select(
-            *[F.expr(e).alias(n) for n, e in key_cols]).distinct()
-
-        # 2. recompute exactly those groups from the source's current state
-        src = t.scan()
-        if where is not None:
-            src = src.filter(where)
-        keys = touched.limit(1001).collect()
-        if not keys:
-            # delta contained no rows in the MV's scope — advance the
-            # synchronized snapshot without touching the backing table
-            mv.source_snapshot_id = head.snapshot_id
-            return self._finish_refresh(mv, backing)
-        few_keys = len(keys) <= 1000 and len(key_cols) == 1
-        backing_cond = None
-        if few_keys:
-            name0 = key_cols[0][0]
-            vals = [r[name0] for r in keys]
-            non_null = [v for v in vals if v is not None]
-
-            def _key_cond(col):
-                c = col.isin(non_null) if non_null else F.lit(False)
-                if len(non_null) < len(vals):
-                    # isin() never matches NULL — a touched NULL-key group
-                    # must be recomputed too, or it silently vanishes.
-                    c = c | col.isNull()
-                return c
-
-            src = src.filter(_key_cond(F.expr(key_cols[0][1])))
-            backing_cond = _key_cond(F.col(name0))
-        else:
-            # Round 12: this join was latently AMBIGUOUS whenever a group
-            # key was a plain column also present in the source (`region`
-            # vs touched's `region`); the old bare `except Exception`
-            # swallowed the AnalysisException and silently full-recomputed
-            # — exactly the masked-bug class VERDICT r11 #5 predicted.
-            # Project uniquely-named key columns on BOTH sides instead.
-            probe, hint = self._semi_join_probe(touched, len(keys), mv)
-            tagged = src
-            cond = None
-            for i, (n, e) in enumerate(key_cols):
-                tagged = tagged.withColumn(f"__mv_k{i}", F.expr(e))
-                eq = F.col(f"__mv_k{i}").eqNullSafe(F.col(f"__mv_p{i}"))
-                cond = eq if cond is None else (cond & eq)
-            pk = probe.select(*[F.col(n).alias(f"__mv_p{i}")
-                                for i, (n, _e) in enumerate(key_cols)])
-            src = tagged.join(F.broadcast(pk) if hint else pk,
-                              cond, "left_semi") \
-                .drop(*[f"__mv_k{i}" for i in range(len(key_cols))])
-        aggs = []
-        for i, (fn, expr, _a) in enumerate(items):
-            if fn == "":
-                continue
-            base = fn[:-9] if fn.endswith("_distinct") else fn
-            inner = f"distinct {expr}" if fn.endswith("_distinct") else expr
-            aggs.append(F.expr(f"{base}({inner})").alias(backing_cols[i]))
-        recomputed = src.groupBy(
-            *[F.expr(e).alias(n) for n, e in key_cols]).agg(*aggs) \
-            .select(backing_cols)
-
-        # 3. swap recomputed groups into the backing table keyed by the
-        #    touched group keys — untouched backing data files are never
-        #    rewritten, so refresh cost is O(touched groups), not O(|MV|).
-        agg_cols = [backing_cols[i]
-                    for i, (fn, _e, _a) in enumerate(items) if fn != ""]
-        self._swap_groups(backing, backing_cols, [n for n, _e in key_cols],
-                          agg_cols, touched, recomputed, backing_cond)
-        mv.source_snapshot_id = head.snapshot_id
-        return self._finish_refresh(mv, backing)
 
     #: touched-group fraction above which partial recompute stops paying:
     #: the recompute scan covers most of the source anyway, so refuse and
@@ -1258,8 +1071,7 @@ class MVManager:
                      key_names: list[str], agg_cols: list[str],
                      touched: DataFrame, recomputed: DataFrame,
                      backing_cond) -> None:
-        """Swap recomputed groups into the backing table (shared by the
-        single-table and join incremental paths)."""
+        """Swap recomputed groups into the backing table."""
         if backing_cond is not None:
             # few-keys fast path: one CoW delete of the touched-key rows +
             # one append of their recomputed aggregates, a single commit.
@@ -1297,24 +1109,10 @@ class MVManager:
             check_cardinality=False,
         )
 
-    @staticmethod
-    def _sql_lit(v) -> str:
-        import datetime as _dt
-
-        if isinstance(v, bool):
-            return "true" if v else "false"
-        if isinstance(v, (int, float)):
-            return repr(v)
-        if isinstance(v, _dt.datetime):
-            return f"TIMESTAMP '{v}'"
-        if isinstance(v, _dt.date):
-            return f"DATE '{v}'"
-        return "'" + str(v).replace("'", "''") + "'"
-
-    def _refresh_incremental_join(self, mv: MaterializedView) -> MaterializedView:
-        """Incremental refresh for inner/left-equi-join GROUP BY views —
-        beyond both the reference (full recompute) and round 3
-        (single-table only).
+    def _refresh_incremental(self, mv: MaterializedView) -> MaterializedView:
+        """Partial group recompute (see refresh docstring) for GROUP BY
+        views over a single table or an inner/left equi-join tree —
+        beyond the reference (full recompute).
 
         Touched-group detection handles changes on EVERY side: each changed
         table's changelog window (old AND new row images) is joined against
@@ -1322,12 +1120,14 @@ class MVManager:
         finds the dimension row it joined through, and a changed dimension
         row surfaces every group it granted or revoked. The union of those
         key sets is recomputed from the sources' current state — restricted
-        by a pushed-down IN-list when the touched keys are few (the filter
-        lands on whichever scan provides the key column and shrinks the
-        join), or a pre-aggregation broadcast semi-join otherwise — and
-        swapped in with the same file-minimal keyed MERGE as the
-        single-table path. Refresh cost stays O(touched groups)."""
-        plan = self._join_maintenance_plan(mv.query)
+        by an ``isin`` on the projected key column when the touched keys
+        are few (collected driver-side; the filter pushes down to whichever
+        scan provides the key column, so parquet min/max and partition
+        pruning apply and the join shrinks), or a pre-aggregation broadcast
+        semi-join otherwise — and swapped in with a file-minimal delete +
+        append or keyed MERGE. Refresh cost stays O(touched groups), never
+        O(|MV|)."""
+        plan = self._maintenance_plan(mv.query)
         if plan is None:
             raise ParseError("not incrementally maintainable")
         sources, info = plan
@@ -1444,31 +1244,10 @@ class MVManager:
 
         keys = touched.limit(1001).collect()
         if not keys:
-            self._record_join_sources(mv, sources)
+            # no changed row in the view's scope — advance the sync point
+            # without touching the backing table
+            self._record_sources(mv, sources, heads)
             return self._finish_refresh(mv, backing)
-        few_keys = len(keys) <= 1000 and len(key_cols) == 1
-        backing_cond = None
-        key_filter_sql = ""
-        if few_keys:
-            name0, expr0 = key_cols[0]
-            vals = [r[name0] for r in keys]
-            non_null = [v for v in vals if v is not None]
-
-            def _key_cond(col):
-                c = col.isin(non_null) if non_null else F.lit(False)
-                if len(non_null) < len(vals):
-                    c = c | col.isNull()
-                return c
-
-            backing_cond = _key_cond(F.col(name0))
-            parts = []
-            if non_null:
-                lits = ", ".join(self._sql_lit(v) for v in non_null)
-                parts.append(f"{expr0} IN ({lits})")
-            if len(non_null) < len(vals):
-                parts.append(f"{expr0} IS NULL")
-            key_filter_sql = (" AND " if where_sql else " WHERE ") \
-                + "(" + " OR ".join(parts) + ")"
 
         # 2. recompute exactly those groups from current source state:
         #    project group keys + aggregate arguments below the aggregation,
@@ -1482,9 +1261,24 @@ class MVManager:
             arg_specs.append((backing_cols[i], fn, an))
             proj.append(("1" if e.strip() == "*" else e) + f" AS {an}")
         base = self.spark.sql(
-            f"SELECT {', '.join(proj)} FROM {from_sql}"
-            f"{where_sql}{key_filter_sql}")
-        if not few_keys:
+            f"SELECT {', '.join(proj)} FROM {from_sql}{where_sql}")
+        backing_cond = None
+        if len(keys) <= 1000 and len(key_cols) == 1:
+            name0 = key_cols[0][0]
+            vals = [r[name0] for r in keys]
+            non_null = [v for v in vals if v is not None]
+
+            def _key_cond(col):
+                c = col.isin(non_null) if non_null else F.lit(False)
+                if len(non_null) < len(vals):
+                    # isin() never matches NULL — a touched NULL-key group
+                    # must be recomputed too, or it silently vanishes.
+                    c = c | col.isNull()
+                return c
+
+            base = base.filter(_key_cond(F.col(name0)))
+            backing_cond = _key_cond(F.col(name0))
+        else:
             probe, hint = self._semi_join_probe(touched, len(keys), mv)
             b, k = base.alias("b"), probe.alias("k")
             cond = None
@@ -1500,10 +1294,10 @@ class MVManager:
         recomputed = base.groupBy(
             *[F.col(n) for n, _e in key_cols]).agg(*aggs).select(backing_cols)
 
-        # 3. file-minimal swap, shared with the single-table path
+        # 3. file-minimal swap
         self._swap_groups(backing, backing_cols, [n for n, _e in key_cols],
                           agg_cols, touched, recomputed, backing_cond)
-        self._record_join_sources(mv, sources)
+        self._record_sources(mv, sources, heads)
         return self._finish_refresh(mv, backing)
 
     def show(self) -> DataFrame:

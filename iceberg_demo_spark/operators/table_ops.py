@@ -429,7 +429,7 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     src.append(orders.filter(F.col("o_orderkey") % 2 == 1))
     eng.sql("REFRESH MATERIALIZED VIEW mvi INCREMENTAL")
     mv = eng.mv_catalog.get("mvi")
-    assert mv.source_snapshot_id == \
+    assert mv.source_snapshots["db_ord_src"][1] == \
         src.metadata.current_snapshot().snapshot_id, "incremental did not sync"
     return (
         eng.mv.backing_df(mv)
@@ -517,7 +517,7 @@ def mv_changelog_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     eng.sql("REFRESH MATERIALIZED VIEW mvd DELTA")
     assert eng.mv.last_refresh_mode == "delta", eng.mv.last_refresh_mode
     mv = eng.mv_catalog.get("mvd")
-    assert mv.source_snapshot_id == \
+    assert mv.source_snapshots["db_ord_cl"][1] == \
         src.metadata.current_snapshot().snapshot_id, "delta did not sync"
     return (eng.mv.backing_df(mv)
             .select("o_orderpriority", "total_cents", "cnt")
@@ -558,7 +558,7 @@ def mv_join_changelog_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     absorbs a fact-only DELETE + UPDATE + INSERT commit chain by
     joining the changelog's SIGNED fact images through the UNCHANGED
     dimension and folding the per-group delta with one keyed MERGE
-    (``_refresh_changelog_delta_join``) — neither the fact table nor
+    (``_refresh_delta``) — neither the fact table nor
     the MV is rescanned, and the gate asserts ``last_refresh_mode ==
     "delta"`` so a fallback cannot masquerade. Since round 12 the path
     is TWO-SIDED (telescoping decomposition): a changed dimension is
@@ -962,7 +962,7 @@ def streaming_mv_delta_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert len(modes) >= 2, f"expected multiple micro-batches, got {modes}"
     assert all(m == "delta" for m in modes), modes
     mv = eng.mv_catalog.get("mvsd")
-    assert mv.source_snapshot_id == \
+    assert mv.source_snapshots["db_ord_stream"][1] == \
         t.metadata.current_snapshot().snapshot_id, "stream did not sync"
     return (eng.mv.backing_df(mv)
             .select("o_orderpriority", "total_cents", "cnt")

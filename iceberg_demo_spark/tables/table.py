@@ -1638,11 +1638,14 @@ class Table:
         not_matched_by_source: list[dict] | None = None,
         branch: str = MAIN_BRANCH,
         check_cardinality: bool = True,
+        summary: dict | None = None,
     ) -> Snapshot | None:
         """MERGE INTO with the reference's four variants
         (iceberg_it.py:1286-1500): multiple WHEN MATCHED clauses are
         first-match-wins; WHEN NOT MATCHED BY SOURCE updates/deletes target
-        rows without a source match.
+        rows without a source match. ``summary`` entries are written into
+        the MERGE's own snapshot summary (nothing is committed, so nothing
+        is written, when the MERGE changes no row).
 
         Clause shapes (expressions are SQL strings; target alias ``t``,
         source alias ``s``):
@@ -1687,7 +1690,8 @@ class Table:
         try:
             return self._merge_body(
                 src_cached, on, matched, not_matched, not_matched_by_source,
-                branch, check_cardinality, old, dels, schema_id, st, mor)
+                branch, check_cardinality, old, dels, schema_id, st, mor,
+                {**(summary or {}), "operation-detail": "merge"})
         finally:
             if own_pin:
                 src_cached.unpersist()
@@ -1696,7 +1700,7 @@ class Table:
                     not_matched: list[dict], not_matched_by_source: list[dict],
                     branch: str, check_cardinality: bool, old: list[DataFile],
                     dels: list[DeleteFile], schema_id: int, st: T.StructType,
-                    mor: bool) -> Snapshot | None:
+                    mor: bool, summary: dict) -> Snapshot | None:
         target = self._read_files(old, schema_id, with_file_col=True,
                                   delete_files=dels, with_pos_col=mor).alias("t")
         src = source.withColumn(_S_PRESENT_COL, F.lit(True)).alias("s")
@@ -1721,7 +1725,7 @@ class Table:
         if mor:
             return self._merge_mor(
                 old, dels, target, src, joined, on_expr, has_match, st, schema_id,
-                matched, not_matched, not_matched_by_source, branch)
+                matched, not_matched, not_matched_by_source, branch, summary)
 
         # Copy-on-write: which files must be rewritten? Files with join
         # matches, plus — if there are NOT MATCHED BY SOURCE clauses — files
@@ -1754,8 +1758,7 @@ class Table:
         if not hit and not new_files:
             return None
         files = kept + new_files
-        return self._commit("overwrite", files, new_files, hit, branch,
-                            {"operation-detail": "merge"})
+        return self._commit("overwrite", files, new_files, hit, branch, summary)
 
     def _merge_inserts(self, inserts: DataFrame, st: T.StructType,
                        not_matched: list[dict]) -> DataFrame | None:
@@ -1841,7 +1844,7 @@ class Table:
                    target: DataFrame, src: DataFrame, joined: DataFrame,
                    on_expr: Column, has_match: Column, st: T.StructType,
                    schema_id: int, matched: list[dict], not_matched: list[dict],
-                   nmbs: list[dict], branch: str) -> Snapshot | None:
+                   nmbs: list[dict], branch: str, summary: dict) -> Snapshot | None:
         """Merge-on-read MERGE: no data file is rewritten. Every row claimed
         by a MATCHED / NOT MATCHED BY SOURCE clause gets a position-delete
         entry; UPDATE clauses additionally append the updated row image;
@@ -1871,8 +1874,7 @@ class Table:
         if not new_dels and not new_files:
             return None
         return self._commit("overwrite", old + new_files, new_files, [], branch,
-                            {"operation-detail": "merge",
-                             "added-delete-files": str(len(new_dels))},
+                            {**summary, "added-delete-files": str(len(new_dels))},
                             delete_files=dels + new_dels)
 
     # -- metadata tables ---------------------------------------------------

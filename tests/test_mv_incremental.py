@@ -50,14 +50,14 @@ def test_incremental_refresh_after_append(engine):
     t = _setup(engine, ROWS)
     engine.sql(MV_SQL)
     mv = engine.mv_catalog.get("inc_mv")
-    assert mv.source_table == "db.sales"
-    assert mv.source_snapshot_id > 0
+    assert mv.source_snapshots["db_sales"][0] == "db.sales"
+    assert mv.source_snapshots["db_sales"][1] > 0
     t.append(engine.spark.createDataFrame(
         [("east", "w", 7.0), ("south", "g", 1.0)], schema=t.schema()))
     engine.sql("REFRESH MATERIALIZED VIEW inc_mv INCREMENTAL")
     assert _mv_rows(engine, "inc_mv") == _expected(engine, t)
-    assert engine.mv_catalog.get("inc_mv").source_snapshot_id == \
-        t.metadata.current_snapshot().snapshot_id
+    assert engine.mv_catalog.get("inc_mv").source_snapshots["db_sales"][1] \
+        == t.metadata.current_snapshot().snapshot_id
 
 
 def test_incremental_refresh_after_delete_and_update(engine):
@@ -79,7 +79,8 @@ def test_incremental_noop_when_in_sync(engine):
     engine.sql(MV_SQL)
     before = t.metadata.current_snapshot().snapshot_id
     engine.sql("REFRESH MATERIALIZED VIEW inc_mv INCREMENTAL")
-    assert engine.mv_catalog.get("inc_mv").source_snapshot_id == before
+    assert engine.mv_catalog.get("inc_mv").source_snapshots["db_sales"][1] \
+        == before
     assert _mv_rows(engine, "inc_mv") == _expected(engine, t)
 
 
@@ -347,8 +348,8 @@ def test_incremental_refresh_out_of_scope_delta_is_metadata_only(engine):
     engine.sql("REFRESH MATERIALIZED VIEW scoped_mv INCREMENTAL")
     assert backing.refresh().metadata.current_snapshot().snapshot_id \
         == snap_before
-    assert engine.mv_catalog.get("scoped_mv").source_snapshot_id \
-        == t.metadata.current_snapshot().snapshot_id
+    assert engine.mv_catalog.get("scoped_mv").source_snapshots[
+        "db_scoped"][1] == t.metadata.current_snapshot().snapshot_id
 
 
 # -- LEFT-join incremental refresh (round 4, second half) -------------------
@@ -1139,3 +1140,168 @@ def test_left_join_mv_null_passing_where_still_refuses(engine):
         "WHERE d.zone IS NULL "
         "GROUP BY s.region")
     assert not engine.mv_catalog.get("np_mv").source_snapshots
+
+
+# -- one maintenance path per refresh mode -----------------------------------
+
+@pytest.mark.parametrize("commit_before_retry", [False, True])
+def test_delta_crash_after_merge_commit_folds_window_once(
+        engine, monkeypatch, commit_before_retry):
+    """A crash right after the backing MERGE commits and before the
+    catalog's sync advance: the window stamp is written in the MERGE's
+    own snapshot, so the retried REFRESH … DELTA resumes after the
+    folded window instead of applying it a second time — also when the
+    source committed again before the retry, which widens the window the
+    retry would otherwise read from the stale sync point."""
+    from iceberg_demo_spark.tables.table import Table
+
+    spark = engine.spark
+    src = engine.catalog.create_table(
+        "db.facts", "k STRING NOT NULL, amt BIGINT NOT NULL")
+    src.append(spark.createDataFrame(
+        [("a", 10), ("a", 20), ("b", 5)], "k STRING, amt BIGINT"))
+    engine.register("db.facts")
+    engine.sql("CREATE MATERIALIZED VIEW mvc AS "
+               "SELECT k, SUM(amt) AS total, COUNT(*) AS cnt "
+               "FROM db_facts GROUP BY k")
+    src.append(spark.createDataFrame(
+        [("a", 1), ("c", 7)], "k STRING, amt BIGINT"))
+    merge = Table.merge
+
+    def merge_then_crash(self, *a, **kw):
+        merge(self, *a, **kw)
+        raise RuntimeError("crash after the MERGE commit")
+
+    monkeypatch.setattr(Table, "merge", merge_then_crash)
+    with pytest.raises(RuntimeError, match="crash after the MERGE"):
+        engine.sql("REFRESH MATERIALIZED VIEW mvc DELTA")
+    monkeypatch.setattr(Table, "merge", merge)
+    if commit_before_retry:
+        src.append(spark.createDataFrame([("b", 100)], "k STRING, amt BIGINT"))
+    engine.sql("REFRESH MATERIALIZED VIEW mvc DELTA")
+    assert engine.mv.last_refresh_mode == "delta"
+    mv = engine.mv_catalog.get("mvc")
+    got = sorted(tuple(r) for r in engine.mv.backing_df(mv)
+                 .select("k", "total", "cnt").collect())
+    b = ("b", 105, 2) if commit_before_retry else ("b", 5, 1)
+    assert got == [("a", 31, 3), b, ("c", 7, 1)]
+    assert mv.source_snapshots["db_facts"][1] == \
+        src.metadata.current_snapshot().snapshot_id
+
+
+def test_join_mv_incremental_decimal_38_18_group_key(engine):
+    """The touched-key restriction compares DECIMAL(38,18) keys exactly:
+    two dim codes that differ only in the 18th fractional digit stay two
+    groups, and an append touching the first recomputes only that one
+    (a quoted-string IN-list compared them through a lossy cast and
+    recomputed both, duplicating the untouched group's row)."""
+    from decimal import Decimal
+
+    spark = engine.spark
+    c1 = Decimal("12345678901234567890.123456789012345678")
+    c2 = Decimal("12345678901234567890.123456789012345679")
+    fact = engine.catalog.create_table(
+        "db.dfact", "ck BIGINT NOT NULL, amt BIGINT NOT NULL")
+    dim = engine.catalog.create_table(
+        "db.ddim", "ck BIGINT NOT NULL, code DECIMAL(38,18) NOT NULL")
+    dim.append(spark.createDataFrame([(1, c1), (2, c2)], dim.schema()))
+    fact.append(spark.createDataFrame([(1, 10), (2, 20)], fact.schema()))
+    engine.register("db.dfact")
+    engine.register("db.ddim")
+    engine.sql("CREATE MATERIALIZED VIEW dec_mv AS "
+               "SELECT d.code, SUM(f.amt) AS total, COUNT(*) AS cnt "
+               "FROM db_dfact f JOIN db_ddim d ON f.ck = d.ck "
+               "GROUP BY d.code")
+    fact.append(spark.createDataFrame([(1, 5)], fact.schema()))
+    engine.sql("REFRESH MATERIALIZED VIEW dec_mv INCREMENTAL")
+    assert engine.mv.last_refresh_mode == "incremental"
+    got = sorted(tuple(r) for r in engine.mv.backing_df(
+        engine.mv_catalog.get("dec_mv")).collect())
+    assert got == [(c1, 15, 2), (c2, 20, 1)]
+
+
+def test_delta_and_incremental_equal_full_recompute_under_random_dml(
+        engine):
+    """Seeded stream of fact commits — append, delete, update and merge,
+    each once copy-on-write and once merge-on-read — plus dimension
+    updates. After every commit a one-table SUM/COUNT(*) view and a
+    fact ⋈ dim view, each kept by REFRESH … DELTA and by REFRESH …
+    INCREMENTAL, equal a from-scratch aggregate and report the requested
+    mode: both shapes run the same maintenance path per mode."""
+    import random
+
+    rng = random.Random(7301)
+    spark = engine.spark
+    fact = engine.catalog.create_table(
+        "db.rf", "id BIGINT NOT NULL, grp STRING NOT NULL, "
+        "ck BIGINT NOT NULL, amt BIGINT NOT NULL")
+    dim = engine.catalog.create_table(
+        "db.rd", "ck BIGINT NOT NULL, seg STRING NOT NULL")
+    next_id = 0
+
+    def batch(n):
+        nonlocal next_id
+        rows = [(next_id + i, f"g{rng.randrange(4)}", rng.randrange(6),
+                 rng.randrange(-50, 100)) for i in range(n)]
+        next_id += n
+        return spark.createDataFrame(rows, fact.schema())
+
+    fact.append(batch(40))
+    dim.append(spark.createDataFrame(
+        [(c, f"s{c % 3}") for c in range(6)], dim.schema()))
+    engine.register("db.rf")
+    engine.register("db.rd")
+    one = ("SELECT grp, SUM(amt) AS total, COUNT(*) AS cnt "
+           "FROM db_rf GROUP BY grp")
+    two = ("SELECT d.seg, SUM(f.amt) AS total, COUNT(*) AS cnt "
+           "FROM db_rf f JOIN db_rd d ON f.ck = d.ck GROUP BY d.seg")
+    views = {}  # view name → requested refresh mode
+    for shape, q in (("one", one), ("two", two)):
+        for mode in ("delta", "incremental"):
+            engine.sql(f"CREATE MATERIALIZED VIEW rv_{shape}_{mode} AS {q}")
+            views[f"rv_{shape}_{mode}"] = mode
+
+    def expected(name):
+        f, d = fact.scan(), dim.scan()
+        base = (f.groupBy("grp") if "_one_" in name
+                else f.join(d, "ck").groupBy("seg"))
+        return {tuple(r) for r in base.agg(
+            F.sum("amt"), F.count(F.lit(1))).collect()}
+
+    steps = [(op, mode) for op in ("append", "delete", "update", "merge")
+             for mode in ("copy-on-write", "merge-on-read")]
+    steps += [("dim", None)] * 2
+    rng.shuffle(steps)
+    for op, mode in steps:
+        if mode is not None and op != "append":
+            fact.set_properties({f"write.{op}.mode": mode})
+        if op == "append":
+            fact.append(batch(5))
+        elif op == "delete":
+            fact.delete_where(f"id % 7 = {rng.randrange(7)}")
+        elif op == "update":
+            fact.update_where(
+                {"amt": f"amt + {rng.randrange(1, 9)}", "ck": "(ck + 1) % 6"},
+                f"id % 5 = {rng.randrange(5)}")
+        elif op == "merge":
+            ids = rng.sample(range(next_id), 6)
+            src = batch(4).union(spark.createDataFrame(
+                [(i, f"g{rng.randrange(4)}", rng.randrange(6),
+                  rng.randrange(-50, 100)) for i in ids], fact.schema()))
+            fact.merge(src, on="t.id = s.id",
+                       matched=[{"condition": "s.amt < 0",
+                                 "action": "delete"},
+                                {"condition": None, "action": "update",
+                                 "set": {"grp": "s.grp", "amt": "s.amt"}}],
+                       not_matched=[{"condition": None, "values": None}])
+        else:
+            dim.update_where({"seg": f"'s{rng.randrange(4)}'"},
+                             f"ck = {rng.randrange(6)}")
+        for name, want_mode in views.items():
+            engine.sql(f"REFRESH MATERIALIZED VIEW {name} "
+                       f"{want_mode.upper()}")
+            assert engine.mv.last_refresh_mode == want_mode, (
+                op, mode, name, engine.mv.last_refresh_fallback_reason)
+            got = {tuple(r) for r in engine.mv.backing_df(
+                engine.mv_catalog.get(name)).collect()}
+            assert got == expected(name), (op, mode, name)

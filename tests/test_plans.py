@@ -971,3 +971,117 @@ def test_bm25_compacted_probe_still_partition_pruned(spark):
     assert _re.search(
         r"PartitionFilters: \[tok_bucket#\d+ IN", plan), plan[:400]
     assert "CartesianProduct" not in plan
+
+
+# -- round-13 optimizations (plan evidence: plans/r13/) -----------------------
+
+def _dataframes_built(monkeypatch, fn):
+    """``(fn(), number of DataFrame objects constructed while it ran)`` —
+    each one is an eager analyzer pass over the plan built so far."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
+
+    built = []
+    init = ClassicDF.__init__
+
+    def counting(self, *a, **kw):
+        built.append(1)
+        init(self, *a, **kw)
+
+    monkeypatch.setattr(ClassicDF, "__init__", counting)
+    try:
+        out = fn()
+    finally:
+        monkeypatch.setattr(ClassicDF, "__init__", init)
+    return out, len(built)
+
+
+def _one_statement_cost(spark, monkeypatch, **frames) -> int:
+    """DataFrames one ``spark.sql`` statement over ``frames`` builds."""
+    sql = " UNION ALL ".join(f"SELECT 1 FROM {{{k}}}" for k in frames)
+    return _dataframes_built(monkeypatch,
+                             lambda: spark.sql(sql, **frames))[1]
+
+
+def test_connected_components_small_graph_iterates_without_shuffles(spark):
+    """dedup connected components: when the measured-size gate
+    (``cache.fits_broadcast``) admits the bidirectional edge frame, the
+    edge and label frames collapse to one partition and every
+    label-propagation round — its joins and its min-label aggregate —
+    plans with no shuffle exchange. The returned labels' cached plan
+    nests every round, so one plan string covers the whole loop."""
+    from iceberg_demo_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 5), (6, 7), (7, 8)], "id_a bigint, id_b bigint")
+    labels = connected_components(edges)
+    assert sorted(tuple(r) for r in labels.collect()) == [
+        (1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 6), (7, 6), (8, 6)]
+    plan = labels._jdf.queryExecution().executedPlan().toString()
+    assert "Coalesce 1" in plan
+    assert "Exchange hashpartitioning" not in plan
+    assert "ShuffleQueryStage" not in plan
+
+
+def test_bpe_round_is_one_sql_execution(spark, monkeypatch):
+    """BPE training: each round reads its ranked pair pool AND the
+    previous round's corpus stats with ONE bounded collect (one SQL
+    execution), plus one final stats read; the batched rewrite is one
+    ``spark.sql`` statement (one DataFrame built) whose merge pairs are
+    bound literals — no join against a selection frame, so no
+    per-round broadcast build."""
+    from iceberg_demo_spark.operators import text
+    from iceberg_demo_spark.sources.testdata import load_tables
+    from tests.conftest import SF_SMALL
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def collects():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        it = store.executionsList().iterator()
+        out = set()
+        while it.hasNext():
+            e = it.next()
+            if e.description().startswith("collect") and e.jobs().size():
+                out.add(e.executionId())
+        return out
+
+    docs = load_tables(spark, SF_SMALL, ("documents",))["documents"]
+    before = collects()
+    text._bpe_train(spark, docs)
+    assert len(collects() - before) == text._BPE_ROUNDS + 1
+
+    sym = spark.createDataFrame(
+        [("ab", 1, 1, "a"), ("ab", 1, 2, "b")],
+        "tok string, f bigint, pos int, sym string")
+    applied, built = _dataframes_built(
+        monkeypatch, lambda: text._bpe_apply_pairs(sym, [("a", "b")]))
+    assert built == _one_statement_cost(spark, monkeypatch, df=sym)
+    assert [tuple(r) for r in applied.collect()] == [("ab", 1, 1, "ab")]
+    plan = applied._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "BroadcastExchange" not in plan
+
+
+def test_curation_accounting_is_one_sql_statement(spark, monkeypatch):
+    """The curation accounting tail (survivor counts, mixture budgets,
+    budget fill) is ONE ``spark.sql`` statement shared by the batch and
+    incremental pipelines: building it constructs a single DataFrame —
+    one analyzer pass — instead of one per chained DataFrame call."""
+    from iceberg_demo_spark.operators import curation
+
+    surv = spark.createDataFrame(
+        [(i, f"s{i % 3}", "train" if i % 4 else "valid", 10 + i,
+          f"p{i % 5}") for i in range(40)],
+        "doc_id bigint, source string, split string, n_tok bigint, "
+        "pri string")
+    qual = spark.createDataFrame(
+        [(i, f"s{i % 3}") for i in range(50)], "doc_id bigint, source string")
+    totals = spark.createDataFrame(
+        [("s0", 30), ("s1", 30), ("s2", 30)], "source string, n_total bigint")
+    acc, built = _dataframes_built(
+        monkeypatch, lambda: curation._pipe_accounting(totals, qual, surv))
+    assert built == _one_statement_cost(spark, monkeypatch, totals=totals,
+                                        qual=qual, surv=surv)
+    row = acc.collect()[0]
+    assert (row["source"], row["n_surviving"], row["n_train"],
+            row["n_valid"], row["budget_tokens"]) == ("s0", 14, 10, 4, 150)

@@ -74,7 +74,7 @@ def test_delta_refresh_refuses_non_ancestor_sync_snapshot(spark, tmp_path):
     eng, src = _delta_mv_engine(spark, tmp_path)
     src.delete_where("k = 'b'")
     mv = eng.mv_catalog.get("mvd")
-    mv.source_snapshot_id = 987654321  # expired/rolled-back lineage
+    mv.source_snapshots["db_facts"][1] = 987654321  # expired/rolled back
     eng.mv_catalog.update(mv)
     eng.sql("REFRESH MATERIALIZED VIEW mvd DELTA")
     assert eng.mv.last_refresh_mode == "full"
@@ -398,24 +398,24 @@ def test_delta_window_stamp_makes_replay_idempotent(spark, tmp_path):
     must skip the fold (stamped on the backing snapshot) instead of
     double-counting, then re-advance the catalog."""
     eng, src = _delta_mv_engine(spark, tmp_path)
-    old_sync = eng.mv_catalog.get("mvd").source_snapshot_id
+    old_sync = eng.mv_catalog.get("mvd").source_snapshots["db_facts"][1]
     src.delete_where("k = 'b'")
     src.append(spark.createDataFrame([("c", 7)], "k STRING, amt BIGINT"))
     eng.sql("REFRESH MATERIALIZED VIEW mvd DELTA")
     assert eng.mv.last_refresh_mode == "delta"
     mv = eng.mv_catalog.get("mvd")
     head = src.metadata.current_snapshot().snapshot_id
-    assert mv.source_snapshot_id == head
+    assert mv.source_snapshots["db_facts"][1] == head
     rows_after_first = sorted(
         tuple(r) for r in eng.mv.backing_df(mv)
         .select("k", "total", "cnt").collect())
     # simulate the crash: the catalog advance is lost, the MERGE is not
-    mv.source_snapshot_id = old_sync
+    mv.source_snapshots["db_facts"][1] = old_sync
     eng.mv_catalog.update(mv)
     eng.sql("REFRESH MATERIALIZED VIEW mvd DELTA")
     assert eng.mv.last_refresh_mode == "delta"
     mv = eng.mv_catalog.get("mvd")
-    assert mv.source_snapshot_id == head  # re-synced
+    assert mv.source_snapshots["db_facts"][1] == head  # re-synced
     rows_after_replay = sorted(
         tuple(r) for r in eng.mv.backing_df(mv)
         .select("k", "total", "cnt").collect())
