@@ -13,6 +13,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from iceberg_demo_spark.cache import pin_mark, release_pins_since
 from iceberg_demo_spark.mv.catalog import MaterializedView, MVCatalog
 from iceberg_demo_spark.mv.parser import QueryInfo, parse_select, ParseError
 from iceberg_demo_spark.tables.catalog import Catalog
@@ -580,10 +581,23 @@ class MVManager:
         the maintenance planners) fall back — any other exception is a
         real bug in the maintenance path and propagates, instead of
         silently degrading to a correct-but-O(source) full recompute with
-        no signal (VERDICT r11 #5)."""
+        no signal (VERDICT r11 #5).
+
+        The changelog checkpoints a maintenance refresh pins are released
+        before returning: the backing commit has landed by then and
+        nothing reads them again, so a long-lived session refreshing
+        repeatedly holds no blocks for it."""
         mv = self.mv_catalog.get(name)
         if mv is None:
             raise ValueError(f"Materialized view {name} does not exist")
+        mark = pin_mark()
+        try:
+            return self._refresh(mv, incremental, delta)
+        finally:
+            release_pins_since(mark)
+
+    def _refresh(self, mv: MaterializedView, incremental: bool,
+                 delta: bool) -> MaterializedView:
         self.last_refresh_fallback_reason = None
         if delta and mv.source_snapshots:
             try:

@@ -1735,11 +1735,15 @@ def doc_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: rationale: building it through ~20 DataFrame calls re-analyzed the
 #: growing plan each call — ~0.85 s of pure driver time per gate rep at
 #:  sf0.1). Shapes and arithmetic are verbatim from the DataFrame chain
-#: it replaced, with ONE structural fusion: n_surviving/n_train/n_valid
-#: and the per-source train token sums come from a single scan of
-#: ``surv`` (per_src) instead of two — ``budgets`` filters per_src to
-#: n_train > 0, which is exactly the row set the old groupBy over the
-#: train slice produced, so every downstream value is identical.
+#: it replaced, except that n_surviving/n_train/n_valid and the
+#: per-source train token sums share one CTE (per_src) — ``budgets``
+#: filters it to n_train > 0, exactly the row set the old groupBy over
+#: the train slice produced, so every downstream value is identical.
+#: The sharing saves no scan: per_src is inlined at each of its three
+#: uses, so the optimized plan reads ``surv`` four times (the three
+#: copies plus picked's train slice), as many as the separate
+#: aggregates did; at execution one budgets broadcast is reused, which
+#: leaves three scans.
 _PIPE_ACCOUNTING_SQL = """
 WITH per_src AS (
   SELECT source,
@@ -1815,9 +1819,10 @@ def _pipe_accounting(totals: DataFrame, qual: DataFrame,
     the incremental tier (one copy, so the two can never desync on the
     budget arithmetic). ``totals`` = (source, n_total); ``qual`` =
     quality docs; ``surv`` = survivors with split. One SQL statement
-    (_PIPE_ACCOUNTING_SQL); ``surv`` is read twice in the plan
-    (per-source aggregate + the budget-fill window), so callers that
-    pass an unmaterialized survivors frame should checkpoint it first."""
+    (_PIPE_ACCOUNTING_SQL); ``surv`` is read four times in the optimized
+    plan (three inlined per-source aggregates + the budget-fill window),
+    so callers that pass an unmaterialized survivors frame should
+    checkpoint it first."""
     return totals.sparkSession.sql(_PIPE_ACCOUNTING_SQL, totals=totals,
                                    qual=qual, surv=surv)
 

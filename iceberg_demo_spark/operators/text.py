@@ -1305,12 +1305,13 @@ def _bpe_train(spark: SparkSession, docs: DataFrame):
         pending = [(i, j + 1, a, b, cnt)
                    for j, (a, b, cnt) in enumerate(sel)]
         if sel:
-            # LAZY checkpoint: the next round's pool+stats collection
-            # (or the final stats pass) is the action that materializes
-            # it — same lineage cut and exactly-once work per round as
-            # the eager form, minus one dedicated job per round. The
-            # driver-held batch goes in as literal parameters
-            # (_bpe_apply_pairs), never a joined frame.
+            # LAZY checkpoint: same lineage cut and exactly-once work per
+            # round as the eager form, but NOT one job fewer — the status
+            # store still lists a `localCheckpoint` execution with one job
+            # per round next to the round's collect, because building the
+            # RDD of an AQE plan with a window exchange materializes its
+            # shuffle stage. The driver-held batch goes in as literal
+            # parameters (_bpe_apply_pairs), never a joined frame.
             seq = (_bpe_apply_pairs(seq, [(a, b) for a, b, _ in sel])
                    .transform(_pin_ckpt_lazy))
     st = seq.agg(*_stats_aggs).collect()[0]

@@ -139,7 +139,15 @@ class DeleteFile:
     ``(file_path string, pos bigint)`` rows marking deleted positions in data
     files. ``file_path`` is the data file's path relative to the table
     location. Mirrors Iceberg v2 position deletes
-    (docs/spark-procedures.md:514-572, iceberg_it.py:2274-2294)."""
+    (docs/spark-procedures.md:514-572, iceberg_it.py:2274-2294).
+
+    A row-level write also stores each deleted row's image in Iceberg's
+    optional ``row`` column (a struct of the table row under the commit's
+    schema), so the changelog reads the commit's deleted rows from this
+    file alone; compacted delete files
+    (``rewrite_position_delete_files``) keep the two position columns
+    only. ``records`` counts entries, which is what sizes the scan-side
+    anti-join build."""
 
     path: str  # relative to table location
     records: int
@@ -281,14 +289,17 @@ def write_manifest(location: str, files: list[DataFile], tag: str) -> dict:
 
 def write_manifest_list(location: str, manifests: list[dict],
                         added: str | None, removed: list[str],
-                        tag: str) -> str:
+                        tag: str, changes: dict | None = None) -> str:
     """Persist a snapshot's manifest list: ONE immutable file holding the
     manifest entries (production Iceberg's snapshot → manifest list →
     manifests → data files hierarchy), the path of the commit's delta
-    manifest (``added``, None when the commit added no file) and the
-    paths the commit removed. Keeps the metadata JSON O(snapshots) no
+    manifest (``added``, None when the commit added no file), the paths
+    the commit removed and, for a row-level commit, its change record
+    (see ``Snapshot.changes``). Keeps the metadata JSON O(snapshots) no
     matter how many files or manifests a table accumulates."""
     doc = {"manifests": manifests, "added": added, "removed": removed}
+    if changes is not None:
+        doc["changes"] = changes
     rel, path = _write_metadata_file(location, "manifest-list", tag, doc)
     _cache_put(path, doc)
     return rel
@@ -304,8 +315,9 @@ class Snapshot:
     The metadata JSON stores only the snapshot's header: ids, parent,
     timestamp, operation, schema id, summary, position-delete files and
     the path of its ``manifest_list``. That immutable file holds the
-    manifest entries, the commit's delta manifest and its removed paths;
-    the file list loads lazily (and cached) on first ``.files`` access.
+    manifest entries, the commit's delta manifest, its removed paths and
+    a row-level commit's change record; the file list loads lazily (and
+    cached) on first ``.files`` access.
     Every commit writes one delta manifest for its added files, rewrites
     only the manifests that lose a file and writes one manifest list, so
     commit I/O is O(delta + manifests), never O(total files); see
@@ -361,6 +373,28 @@ class Snapshot:
         if self._files is None:
             return sum(m["n_files"] for m in self.manifests)
         return len(self._files)
+
+    @property
+    def changes(self) -> dict | None:
+        """The change record of a row-level commit (DELETE, UPDATE, MERGE,
+        static overwrite; not a copy-on-write MERGE that rewrote files
+        without its cardinality probe), None for every other commit:
+        ``{"inserted": [paths], "deleted": [paths]}``. Every row of an
+        inserted file is a +1 image and every row of a deleted file a −1
+        image, so ``rows(this) − rows(parent) = inserted − deleted`` as
+        multisets. Inserted files are data files this commit added. A
+        deleted path is either one of this snapshot's position-delete
+        files (merge-on-read: the images are its ``row`` column) or a
+        data-shaped file of old images that no snapshot lists as table
+        data (copy-on-write). Every file is written under this
+        snapshot's schema."""
+        return self._list().get("changes")
+
+    def change_paths(self) -> set[str]:
+        """Relative paths of the files the change record names; they live
+        as long as this snapshot."""
+        c = self.changes
+        return set(c["inserted"]) | set(c["deleted"]) if c else set()
 
     def metadata_paths(self) -> set[str]:
         """Relative paths of every metadata file this snapshot references:

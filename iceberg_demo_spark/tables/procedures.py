@@ -11,12 +11,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from iceberg_demo_spark.cache import pin_checkpoint as _pin_ckpt
-from iceberg_demo_spark.tables.format import MAIN_BRANCH, Snapshot, now_ms
+from iceberg_demo_spark.tables.format import MAIN_BRANCH, DataFile, Snapshot, now_ms
 from iceberg_demo_spark.tables.table import (
-    _DELETE_BROADCAST_BYTES, _FILE_COL, _POS_COL, Table,
+    _FILE_COL, _POS_COL, Table, _delete_set_fits_broadcast,
 )
 
 # -- snapshot management ---------------------------------------------------
@@ -129,8 +129,9 @@ def ancestors_of(table: Table, snapshot_id: int | None = None) -> DataFrame:
 def expire_snapshots(table: Table, older_than_ms: int | None = None,
                      retain_last: int = 1,
                      snapshot_ids: list[int] | None = None) -> dict:
-    """Drop expired snapshots' metadata and delete data files no longer
-    referenced by any surviving snapshot (docs/spark-procedures.md:255-302)."""
+    """Drop expired snapshots' metadata and delete data, delete and
+    change-record files no longer referenced by any surviving snapshot
+    (docs/spark-procedures.md:255-302)."""
     table.check_writable("expire_snapshots")
     md = table.metadata
     # RETAIN d DAYS on a ref: the ref itself expires after that age
@@ -171,6 +172,7 @@ def expire_snapshots(table: Table, older_than_ms: int | None = None,
     survivors = [s for s in md.snapshots if s.snapshot_id not in expire]
     live_after = {f.path for s in survivors for f in s.files}
     live_after.update(f.path for s in survivors for f in s.delete_files)
+    live_after.update(p for s in survivors for p in s.change_paths())
     live_before = table.live_file_paths()
     to_delete = live_before - live_after
     for rel in to_delete:
@@ -206,8 +208,9 @@ _ORPHAN_DEFAULT_AGE_MS = 3 * 24 * 3600 * 1000
 
 def remove_orphan_files(table: Table, older_than_ms: int | None = None,
                         dry_run: bool = False) -> list[str]:
-    """Files under data/ not referenced by ANY snapshot
-    (docs/spark-procedures.md:304-378). ``older_than_ms`` defaults to
+    """Files under data/ not referenced by ANY snapshot — as data, delete
+    or change-record file (docs/spark-procedures.md:304-378).
+    ``older_than_ms`` defaults to
     now − 3 days — deleting younger files could race a concurrent
     in-flight write whose commit hasn't landed yet."""
     table.check_writable("remove_orphan_files")
@@ -531,6 +534,84 @@ def compute_partition_stats(table: Table) -> DataFrame:
 # -- changelog (CDC) -------------------------------------------------------
 
 
+def _record_frames(table: Table, snap: Snapshot,
+                   record: dict) -> tuple[DataFrame | None, DataFrame | None]:
+    """(inserted rows, deleted rows) of a commit, read from its change
+    record (``Snapshot.changes``): the inserted data files as written,
+    and the deleted images from the commit's new position-delete files'
+    ``row`` column (merge-on-read) or its old-images file (copy-on-write)
+    — one commit writes one kind. No file the commit removed or kept is
+    read."""
+    sid = snap.schema_id
+    ins_df = (table._read_files([DataFile(p, 0, 0, sid)
+                                 for p in record["inserted"]], sid)
+              if record["inserted"] else None)
+    deleted = record["deleted"]
+    if not deleted:
+        return ins_df, None
+    if deleted[0] not in {d.path for d in snap.delete_files}:
+        return ins_df, table._read_files(
+            [DataFile(p, 0, 0, sid) for p in deleted], sid)
+    schema = T.StructType([T.StructField("file_path", T.StringType()),
+                           T.StructField("pos", T.LongType()),
+                           T.StructField("row", table._struct(sid))])
+    return ins_df, table.spark.read.schema(schema).parquet(
+        *[os.path.join(table.location, p) for p in deleted]).select("row.*")
+
+
+def _file_diff_frames(table: Table, snap: Snapshot
+                      ) -> tuple[DataFrame | None, DataFrame | None]:
+    """(rows of the files a commit added, rows it removed or newly
+    masked) for a commit without a change record — tables written before
+    row-level writes recorded their changes, overwrites, add_files and
+    cherry-picks. Both sides read whole files; the netting in
+    ``create_changelog_view`` cancels the rows they share."""
+    md = table.metadata
+    by_path = {f.path: f for f in snap.files}
+    parent = md.snapshot_by_id(snap.parent_id) if snap.parent_id else None
+    parent_by_path = {f.path: f for f in parent.files} if parent else {}
+    added = [by_path[p] for p in snap.added_files if p in by_path]
+    removed = [parent_by_path[p] for p in snap.removed_files if p in parent_by_path]
+    # Merge-on-read commits change rows without touching data files:
+    # rows newly masked by this commit's NEW delete files are DELETEs.
+    parent_del_paths = {d.path for d in parent.delete_files} if parent else set()
+    new_dels = [d for d in snap.delete_files if d.path not in parent_del_paths]
+    schema_id = snap.schema_id
+    # no delete entry of this snapshot points into a file it added, so
+    # the added rows are read without the delete anti-join
+    added_df = table._read_files(added, schema_id) if added else None
+    removed_df = (table._read_files(removed, schema_id,
+                                    delete_files=parent.delete_files if parent else None)
+                  if removed else None)
+    if new_dels:
+        # Rows newly masked by this commit's delete files, computed
+        # DIRECTLY from the (file, pos) delete entries: read the
+        # referenced files once under the PARENT's delete set and
+        # semi-join the new entries (position-unique, so multiset
+        # semantics are exact).
+        touched = {
+            r["file_path"]
+            for r in table._delete_entries_df(new_dels).select("file_path").distinct().collect()
+        }
+        ref = [f for f in (parent.files if parent else []) if f.path in touched]
+        before = table._read_files(
+            ref, schema_id,
+            delete_files=parent.delete_files if parent else None,
+            with_pos_col=True)
+        ent = table._delete_entries_df(new_dels)
+        if _delete_set_fits_broadcast(new_dels):
+            ent = F.broadcast(ent)
+        newly_masked = before.join(
+            ent,
+            (before[_FILE_COL] == ent["file_path"])
+            & (before[_POS_COL] == ent["pos"]),
+            "left_semi",
+        ).drop(_FILE_COL, _POS_COL)
+        removed_df = (newly_masked if removed_df is None
+                      else removed_df.unionByName(newly_masked))
+    return added_df, removed_df
+
+
 def create_changelog_view(
     table: Table,
     view_name: str,
@@ -541,10 +622,25 @@ def create_changelog_view(
 ) -> DataFrame:
     """Row-level change stream between snapshots
     (iceberg_it.py:2301-2344, docs/spark-procedures.md:805-941):
-    per ancestor step, INSERTs = rows(added files) ∖ rows(removed files),
-    DELETEs = the reverse; with identifier_columns, paired delete+insert on
-    the same key becomes update_before/update_after. Registers the result as
-    a temp view and returns it."""
+    per ancestor step, INSERTs = rows(snapshot) ∖ rows(parent), DELETEs =
+    the reverse; with identifier_columns, paired delete+insert on the same
+    key becomes update_before/update_after. Registers the result as a temp
+    view and returns it.
+
+    Each step's signed rows come from the cheapest exact source:
+
+    * ``replace`` snapshots (``rewrite_data_files``, ``rewrite_manifests``,
+      ``rewrite_position_delete_files``) change no rows and are skipped,
+      as Iceberg's changelog scan skips them;
+    * a row-level commit reads its change record (``Snapshot.changes``):
+      the new images it inserted and the old images it deleted, O(changed
+      rows), never the files it rewrote;
+    * any other commit diffs the files it added against the files it
+      removed or newly masked (``_file_diff_frames``).
+
+    A step with inserted rows only (an append) or deleted rows only (a
+    DELETE) is its own answer; a step with both is netted, so a row an
+    UPDATE rewrote unchanged cancels exactly as in a whole-file diff."""
     spark = table.spark
     md = table.metadata
     if identifier_columns is None and md.identifier_field_names:
@@ -564,18 +660,12 @@ def create_changelog_view(
     # the same shuffle, tagged with their ordinal/snapshot id
     diff_groups: dict[tuple[str, ...], list[DataFrame]] = {}
     for ordinal, snap in enumerate(chain):
-        by_path = {f.path: f for f in snap.files}
-        parent = md.snapshot_by_id(snap.parent_id) if snap.parent_id else None
-        parent_by_path = {f.path: f for f in parent.files} if parent else {}
-        added = [by_path[p] for p in snap.added_files if p in by_path]
-        removed = [parent_by_path[p] for p in snap.removed_files if p in parent_by_path]
-        # Merge-on-read commits change rows without touching data files:
-        # rows newly masked by this commit's NEW delete files are DELETEs.
-        parent_del_paths = {d.path for d in parent.delete_files} if parent else set()
-        new_dels = [d for d in snap.delete_files if d.path not in parent_del_paths]
-        if not added and not removed and not new_dels:
+        if snap.operation == "replace":
             continue
-        schema_id = snap.schema_id
+        record = snap.changes
+        added_df, removed_df = (_record_frames(table, snap, record)
+                                if record is not None
+                                else _file_diff_frames(table, snap))
 
         def _stamp(df: DataFrame, change: str, ordinal=ordinal,
                    snap=snap) -> DataFrame:
@@ -585,46 +675,14 @@ def create_changelog_view(
                 F.lit(snap.snapshot_id).alias("_commit_snapshot_id"),
             )
 
-        added_df = table._read_files(added, schema_id,
-                                     delete_files=snap.delete_files)
-        if not removed and not new_dels:
-            # pure append: the added rows ARE the inserts — no multiset
-            # diff to compute (exceptAll against the empty removed side
-            # would still shuffle+aggregate the whole added frame twice)
-            parts.append(_stamp(added_df, "INSERT"))
+        if removed_df is None:
+            if added_df is not None:
+                # inserts only: the added rows ARE the inserts — no
+                # multiset diff to compute
+                parts.append(_stamp(added_df, "INSERT"))
             continue
-        removed_df = table._read_files(removed, schema_id,
-                                       delete_files=parent.delete_files if parent else None)
-        if new_dels:
-            # Rows newly masked by this commit's delete files, computed
-            # DIRECTLY from the (file, pos) delete entries: read the
-            # referenced files once under the PARENT's delete set and
-            # semi-join the new entries (position-unique, so multiset
-            # semantics are exact). The previous shape —
-            # before.exceptAll(after) — read those files twice and paid a
-            # full-width multiset diff for what is a keyed lookup.
-            touched = {
-                r["file_path"]
-                for r in table._delete_entries_df(new_dels).select("file_path").distinct().collect()
-            }
-            ref = [f for f in (parent.files if parent else []) if f.path in touched]
-            before = table._read_files(
-                ref, schema_id,
-                delete_files=parent.delete_files if parent else None,
-                with_pos_col=True)
-            ent = table._delete_entries_df(new_dels)
-            if sum(d.bytes for d in new_dels) <= _DELETE_BROADCAST_BYTES:
-                ent = F.broadcast(ent)
-            newly_masked = before.join(
-                ent,
-                (before[_FILE_COL] == ent["file_path"])
-                & (before[_POS_COL] == ent["pos"]),
-                "left_semi",
-            ).drop(_FILE_COL, _POS_COL)
-            removed_df = removed_df.unionByName(newly_masked)
-        if not added and not new_dels:
-            # pure removal (metadata-only delete): the removed rows ARE
-            # the deletes
+        if added_df is None:
+            # deletes only: the removed rows ARE the deletes
             parts.append(_stamp(removed_df, "DELETE"))
             continue
         # Both directions of the multiset diff come from ONE aggregation
@@ -643,22 +701,23 @@ def create_changelog_view(
         for fr in frames[1:]:
             all_signed = all_signed.unionByName(fr)
         # One shuffle nets EVERY diff-needing commit in the window; the
-        # nonzero nets (O(changed rows)) are checkpointed eagerly so both
-        # output branches — and any downstream re-execution, e.g. a MERGE
-        # consuming the changelog — read materialized blocks instead of
-        # re-running the table-sized diff. Two documented costs of this
-        # shape (ADVICE r12): (1) creating the view RUNS the diff jobs
-        # even if the view is never queried, and the checkpoint blocks
-        # stay pinned until the harness releases them — every in-repo
-        # consumer queries the view immediately and harnesses release
-        # per gate, so eager is the right trade here; a long-lived
-        # session creating speculative views should release_pins
-        # between them. (2) explode(sequence(1, |net|)) materializes one
-        # array per netted row: per-row memory is bounded by the largest
-        # single-value multiplicity CHANGE in one commit (duplicates of
-        # one value in one commit), which realistic tables keep tiny;
-        # a pathological million-fold duplicate insert would want the
-        # sequence chunked.
+        # nonzero nets are checkpointed eagerly so both output branches —
+        # and any downstream re-execution, e.g. a MERGE consuming the
+        # changelog — read materialized blocks instead of re-running the
+        # diff. With change records the netted rows are the window's
+        # changed rows (O(changed rows)); only a commit without a record
+        # brings whole files into it. Two documented costs of this shape
+        # (ADVICE r12): (1) creating the view RUNS the netting job even if
+        # the view is never queried, and the checkpoint blocks stay pinned
+        # until released — harnesses release per gate, and MV refresh
+        # releases the pins it took once its backing commit has landed; a
+        # long-lived session creating speculative views should
+        # release_pins between them. (2) explode(sequence(1, |net|))
+        # materializes one array per netted row: per-row memory is bounded
+        # by the largest single-value multiplicity CHANGE in one commit
+        # (duplicates of one value in one commit), which realistic tables
+        # keep tiny; a pathological million-fold duplicate insert would
+        # want the sequence chunked.
         net = (all_signed
                .groupBy(*cols, "_change_ordinal", "_commit_snapshot_id")
                .agg(F.sum("_g_sgn").alias("_g_net"))
@@ -675,8 +734,9 @@ def create_changelog_view(
         parts.extend([ins, dels])
     if not parts:
         out = spark.createDataFrame(
-            [], table.schema().add("_change_type", "string")
-            .add("_change_ordinal", "int").add("_commit_snapshot_id", "long")
+            [], table.schema().add("_change_type", T.StringType())
+            .add("_change_ordinal", T.IntegerType())
+            .add("_commit_snapshot_id", T.LongType())
         )
         out.createOrReplaceTempView(view_name)
         return out
@@ -720,7 +780,9 @@ def rewrite_table_path(table: Table, target_location: str,
     copy of the table whose metadata references ``target_location`` so the
     directory can be rsync'd/distcp'd to the target system. Data files are
     hard-linked when possible (same filesystem), else copied, and so are
-    the manifest lists and manifests every staged snapshot references."""
+    the manifest lists and manifests every staged snapshot references and
+    the change-record files they name, so the copy's changelog reads the
+    same records."""
     import shutil as _sh
 
     from iceberg_demo_spark.tables.format import TableMetadata
@@ -741,8 +803,10 @@ def rewrite_table_path(table: Table, target_location: str,
     files = head.files if head else []
     for f in files:
         stage(f.path)
-    for rel in {p for s in table.metadata.snapshots
-                for p in s.metadata_paths()}:
+    for rel in ({p for s in table.metadata.snapshots
+                 for p in s.metadata_paths() | s.change_paths()}
+                | {d.path for d in (head.delete_files if head else [])}) - {
+                    f.path for f in files}:
         stage(rel)
     md = TableMetadata.from_json(table.metadata.to_json())
     md.location = target_location

@@ -21,6 +21,14 @@ table properties ``write.delete/update/merge.mode``):
   Iceberg's executor delete-file cache (docs/spark-configuration.md:195-198).
   ``rewrite_position_delete_files`` / ``rewrite_data_files`` fold the deletes
   back into data files (docs/spark-procedures.md:514-572).
+
+Every row-level commit also records its change rows (``Snapshot.changes``)
+inside the write job it already runs: merge-on-read stores each deleted
+row's image in the delete file's ``row`` column and its added files hold
+only new rows; copy-on-write tags each rewritten row as carried, new
+image or old image and the writer splits the tags into carried data
+files, new-image data files and one old-images file. The changelog reads
+those files instead of diffing whole rewritten files.
 """
 
 from __future__ import annotations
@@ -54,10 +62,21 @@ _ROW_COL = "_g_row"
 _POS_COL = "_g_pos"
 _S_PRESENT_COL = "_g_s_present"
 
+#: change tag of a copy-on-write rewrite row (see _tag_rows), written as a
+#: hidden directory column: carried unchanged, new image (+1), old image (−1)
+_CHANGE_COL = "_g_change"
+_CARRIED, _NEW_IMAGE, _OLD_IMAGE = "c", "i", "d"
+_TAGGED = "_g_tagged"
+
 #: Position-delete sets up to this size broadcast to executors (the Iceberg
 #: delete-file-distribution analogue); larger sets fall back to a
 #: Catalyst-chosen join so the build side can't OOM.
 _DELETE_BROADCAST_BYTES = 64 * 1024 * 1024
+
+#: in-memory width charged per (file_path, pos) entry of a delete set: the
+#: build side holds entries, not the delete files' bytes, which also carry
+#: the deleted rows' images
+_DELETE_ENTRY_BYTES = 128
 
 #: schema of a position-delete file (Iceberg v2 position deletes)
 _DELETE_SCHEMA = "file_path string, pos bigint"
@@ -74,6 +93,39 @@ class MergeCardinalityError(Exception):
 
 def _col(c: str | Column) -> Column:
     return F.expr(c) if isinstance(c, str) else c
+
+
+def _delete_set_fits_broadcast(delete_files: list[DeleteFile]) -> bool:
+    """Whether a delete set's (file_path, pos) entries are small enough to
+    broadcast, sized by entry count."""
+    return (sum(d.records for d in delete_files) * _DELETE_ENTRY_BYTES
+            <= _DELETE_BROADCAST_BYTES)
+
+
+def _row_image(st: T.StructType, prefix: str = "") -> Column:
+    """The ``row`` column of a position-delete file: the deleted row's
+    image as a struct of the table row."""
+    return F.struct(*[F.col(prefix + f.name).alias(f.name)
+                      for f in st.fields]).alias("row")
+
+
+def _tag_rows(df: DataFrame, claimed: Column, survives: Column,
+              image: list[Column], old: list[Column]) -> DataFrame:
+    """Copy-on-write rewrite rows tagged for the change record: a row no
+    clause claimed is carried as it is (``c``); a claimed row adds its old
+    image (``d``) and, when it survives, its new image (``i``). ``image``
+    is the row as written (the row itself when unclaimed), ``old`` the row
+    as read. Each input row yields its images through one explode, so the
+    tagging rides the rewrite's own write job."""
+    claimed = F.coalesce(claimed, F.lit(False))
+    keep = F.struct(*image, F.when(claimed, F.lit(_NEW_IMAGE))
+                    .otherwise(F.lit(_CARRIED)).alias(_CHANGE_COL))
+    gone = F.struct(*old, F.lit(_OLD_IMAGE).alias(_CHANGE_COL))
+    images = F.array(F.when(~claimed | survives, keep),
+                     F.when(claimed, gone))
+    return (df.select(F.explode(images).alias(_TAGGED))
+            .filter(F.col(_TAGGED).isNotNull())
+            .select(f"{_TAGGED}.*"))
 
 
 class Table:
@@ -529,7 +581,7 @@ class Table:
             # threshold let Catalyst/AQE pick the join (shuffle at scale) —
             # a forced broadcast of a huge delete set would OOM the build
             # side, the first-failure mode called out in SCALE.md
-            if sum(d.bytes for d in delete_files) <= _DELETE_BROADCAST_BYTES:
+            if _delete_set_fits_broadcast(delete_files):
                 dels = F.broadcast(dels)
             out = out.join(
                 dels,
@@ -570,7 +622,10 @@ class Table:
                 return df.repartitionByRange(*cols)
         return df
 
-    def _apply_sort(self, df: DataFrame) -> DataFrame:
+    def _apply_sort(self, df: DataFrame, lead: list[str]) -> DataFrame:
+        """Sort by the table's write order; ``lead`` columns (a tagged
+        write's hidden change column) sort first within each task, so the
+        directory split keeps the write order inside every file."""
         if not self.metadata.sort_order:
             return df
         cols = []
@@ -585,36 +640,50 @@ class Table:
         # parallelism. Global (WRITE ORDERED BY) pays one range exchange of
         # the write set — worth it only when downstream scans depend on a
         # total order; large-scale writers usually want the local variant.
+        lead_cols = [F.col(c) for c in lead]
         if self.metadata.properties.get("write.sort.scope") == "global":
-            return df.repartitionByRange(*cols).sortWithinPartitions(*cols)
-        return df.sortWithinPartitions(*cols)
+            return df.repartitionByRange(*cols).sortWithinPartitions(
+                *lead_cols, *cols)
+        return df.sortWithinPartitions(*lead_cols, *cols)
 
-    def _write_files(self, df: DataFrame, schema_id: int | None = None) -> list[DataFile]:
+    def _write_files(self, df: DataFrame, schema_id: int | None = None,
+                     tagged: bool = False):
         """Write df as parquet data files under data/<commit-uuid>/ and return
         their DataFile entries. Hidden partitioning: derived _p_* columns
         drive the directory layout; source columns stay in the files so
-        snapshot reads are self-contained."""
+        snapshot reads are self-contained.
+
+        ``tagged``: df also carries the change tag of ``_tag_rows``; the
+        same write job splits the rows by tag into one directory each and
+        returns ``(carried, new images, old images)``. The first two are
+        data files; the old images are the commit's deleted-images file."""
         schema_id = self.metadata.current_schema_id if schema_id is None else schema_id
         st = self._struct(schema_id)
+        lead = [_CHANGE_COL] if tagged else []
         aligned = df.select(
             [_align_col(F.col(f.name), df.schema[f.name].dataType, f.dataType).alias(f.name)
              if f.name in df.columns else F.lit(None).cast(f.dataType).alias(f.name)
-             for f in st.fields]
+             for f in st.fields] + lead
         )
         pexprs = self._partition_exprs()
         for name, expr in pexprs:
             aligned = aligned.withColumn(name, expr.cast("string"))
         aligned = self._apply_distribution(aligned, pexprs)
-        aligned = self._apply_sort(aligned)
-        commit_dir = f"data/{uuid.uuid4().hex[:16]}"
-        abs_dir = os.path.join(self.location, commit_dir)
+        aligned = self._apply_sort(aligned, lead)
+        abs_dir = os.path.join(self.location, f"data/{uuid.uuid4().hex[:16]}")
+        dirs = lead + [n for n, _ in pexprs]
         writer = aligned.write.mode("overwrite")
-        if pexprs:
-            writer = writer.partitionBy(*[n for n, _ in pexprs])
+        if dirs:
+            writer = writer.partitionBy(*dirs)
         writer.parquet(abs_dir)
-        return self._list_written(abs_dir, commit_dir, schema_id)
+        if not tagged:
+            return self._list_written(abs_dir, schema_id)
+        return tuple(
+            self._list_written(os.path.join(abs_dir, f"{_CHANGE_COL}={tag}"),
+                               schema_id)
+            for tag in (_CARRIED, _NEW_IMAGE, _OLD_IMAGE))
 
-    def _list_written(self, abs_dir: str, rel_dir: str, schema_id: int) -> list[DataFile]:
+    def _list_written(self, abs_dir: str, schema_id: int) -> list[DataFile]:
         import pyarrow.parquet as pq
 
         out = []
@@ -836,10 +905,14 @@ class Table:
     def _commit(self, operation: str, files: list[DataFile], added: list[DataFile],
                 removed: list[DataFile], branch: str, summary: dict | None = None,
                 delete_files: list[DeleteFile] | None = None,
-                manifests: list[dict] | None = None) -> Snapshot:
+                manifests: list[dict] | None = None,
+                changes: tuple[list, list] | None = None) -> Snapshot:
         """Commit ``files`` as the new head of ``branch``: one delta
         manifest, one manifest list, one metadata JSON. ``manifests``
-        replaces the planned manifest entries (rewrite_manifests)."""
+        replaces the planned manifest entries (rewrite_manifests).
+        ``changes`` = (inserted, deleted) files of a row-level commit's
+        change record (``Snapshot.changes``); their footer row counts
+        become the summary's ``added-records``/``deleted-records``."""
         from iceberg_demo_spark.tables.format import write_manifest_list
 
         parent = self.metadata.current_snapshot(branch)
@@ -849,8 +922,20 @@ class Table:
         manifests, delta = (
             self._plan_manifests(parent, files, added, removed, tag)
             if manifests is None else (manifests, None))
+        record = None
+        if changes is not None:
+            inserted, deleted = changes
+            record = {"inserted": [f.path for f in inserted],
+                      "deleted": [f.path for f in deleted]}
+            # Iceberg's keys, counted over change rows: a copy-on-write
+            # commit reports what a merge-on-read one would, not the
+            # carried rows of the files it rewrote
+            summary = {"added-records": str(sum(f.records for f in inserted)),
+                       "deleted-records": str(sum(f.records for f in deleted)),
+                       **(summary or {})}
         manifest_list = write_manifest_list(
-            self.location, manifests, delta, [f.path for f in removed], tag)
+            self.location, manifests, delta, [f.path for f in removed], tag,
+            record)
         snap = Snapshot(
             snapshot_id=self.metadata.next_snapshot_id(),
             parent_id=parent.snapshot_id if parent else None,
@@ -889,7 +974,8 @@ class Table:
         return self.metadata.properties.get(f"write.{op}.mode", "copy-on-write").lower()
 
     def _write_delete_files(self, entries: DataFrame) -> list[DeleteFile]:
-        """Write position-delete entries (file_path, pos) as parquet.
+        """Write position-delete entries (file_path, pos) as parquet, with
+        the deleted rows' images in ``row`` when the entries carry them.
 
         Entries are globally sorted by (file_path, pos) so each delete file
         covers a contiguous path range — the reader's broadcast build then
@@ -971,9 +1057,10 @@ class Table:
         commit."""
         self.check_writable("INSERT OVERWRITE (static) / overwrite(condition)")
         old = self._branch_files(branch)
-        kept, rewritten, removed = self._cow_delete(old, condition, branch)
+        kept, rewritten, removed, images = self._cow_delete(old, condition, branch)
         new = self._write_files(df)
-        return self._commit("overwrite", kept + rewritten + new, rewritten + new, removed, branch)
+        return self._commit("overwrite", kept + rewritten + new, rewritten + new, removed, branch,
+                            changes=(new, images))
 
     def delete_where(self, condition: str | Column, branch: str = MAIN_BRANCH) -> Snapshot | None:
         """Row-level DELETE. Copy-on-write: files whose rows all survive are
@@ -991,22 +1078,27 @@ class Table:
                 old, condition if isinstance(condition, str) else None)
             df = self._read_files(cand, schema_id, delete_files=dels, with_pos_col=True)
             entries = df.filter(F.coalesce(cond, F.lit(False))).select(
-                F.col(_FILE_COL).alias("file_path"), F.col(_POS_COL).alias("pos"))
+                F.col(_FILE_COL).alias("file_path"), F.col(_POS_COL).alias("pos"),
+                _row_image(self._struct(schema_id)))
             new_dels = self._write_delete_files(entries)
             if not new_dels:
                 return None
             return self._commit("delete", old, [], [], branch,
                                 {"operation-detail": "merge-on-read",
                                  "added-delete-files": str(len(new_dels))},
-                                delete_files=dels + new_dels)
-        kept, rewritten, removed = self._cow_delete(old, condition, branch)
+                                delete_files=dels + new_dels,
+                                changes=([], new_dels))
+        kept, rewritten, removed, images = self._cow_delete(old, condition, branch)
         if not removed:
             return None  # nothing matched — no new snapshot (Iceberg no-ops too)
-        return self._commit("delete", kept + rewritten, rewritten, removed, branch)
+        return self._commit("delete", kept + rewritten, rewritten, removed, branch,
+                            changes=([], images))
 
     def _cow_delete(self, files: list[DataFile], condition: str | Column,
-                    branch: str) -> tuple[list[DataFile], list[DataFile], list[DataFile]]:
-        """Returns (untouched, rewritten_new_files, removed_old_files)."""
+                    branch: str) -> tuple[list[DataFile], list[DataFile],
+                                          list[DataFile], list[DataFile]]:
+        """Returns (untouched, rewritten_new_files, removed_old_files,
+        deleted-row images)."""
         cond = _col(condition)
         dels = self._branch_deletes(branch)
         # DML always operates on the CURRENT schema: files written under
@@ -1017,16 +1109,17 @@ class Table:
             cond_text=condition if isinstance(condition, str) else None,
             delete_files=dels)
         if not hit_paths:
-            return list(files), [], []
+            return list(files), [], [], []
         hit = [f for f in files if f.path in hit_paths]
         kept = [f for f in files if f.path not in hit_paths]
-        # Metadata-only fast path: if every row in a hit file matches the
-        # predicate, drop the file without rewriting. Detect via counts.
-        survivors = self._read_files(hit, schema_id, delete_files=dels).filter(
-            ~F.coalesce(cond, F.lit(False))
-        )
-        rewritten = self._write_files(survivors, schema_id)
-        return kept, rewritten, hit
+        # A hit file whose every row matches leaves no carried file (the
+        # writer drops empty files): the file is simply removed.
+        src = self._read_files(hit, schema_id, delete_files=dels)
+        rows = [F.col(c) for c in src.columns]
+        rewritten, _, images = self._write_files(
+            _tag_rows(src, cond, F.lit(False), rows, rows), schema_id,
+            tagged=True)
+        return kept, rewritten, hit, images
 
     def _matching_files(self, files: list[DataFile], cond: Column,
                         schema_id: int, cond_text: str | None = None,
@@ -1557,7 +1650,8 @@ class Table:
             matched_rows = df.filter(F.coalesce(cond, F.lit(False))).persist()
             try:
                 entries = matched_rows.select(
-                    F.col(_FILE_COL).alias("file_path"), F.col(_POS_COL).alias("pos"))
+                    F.col(_FILE_COL).alias("file_path"), F.col(_POS_COL).alias("pos"),
+                    _row_image(st))
                 new_dels = self._write_delete_files(entries)
                 if not new_dels:
                     return None
@@ -1574,7 +1668,8 @@ class Table:
             return self._commit("overwrite", old + new_files, new_files, [], branch,
                                 {"operation-detail": "update",
                                  "added-delete-files": str(len(new_dels))},
-                                delete_files=dels + new_dels)
+                                delete_files=dels + new_dels,
+                                changes=(new_files, new_dels))
 
         hit_paths = self._matching_files(old, cond, schema_id, cond_text=cond_text,
                                          delete_files=dels)
@@ -1584,17 +1679,20 @@ class Table:
         kept = [f for f in old if f.path not in hit_paths]
         src = self._read_files(hit, schema_id, delete_files=dels)
         matched = F.coalesce(cond, F.lit(False))
-        out = src.select(
-            [
-                F.when(matched, _col(assignments[c]).cast(src.schema[c].dataType))
-                .otherwise(F.col(c)).alias(c)
-                if c in assignments else F.col(c)
-                for c in src.columns
-            ]
-        )
-        rewritten = self._write_files(out, schema_id)
+        image = [
+            F.when(matched, _col(assignments[c]).cast(src.schema[c].dataType))
+            .otherwise(F.col(c)).alias(c)
+            if c in assignments else F.col(c)
+            for c in src.columns
+        ]
+        carried, new_images, images = self._write_files(
+            _tag_rows(src, matched, F.lit(True), image,
+                      [F.col(c) for c in src.columns]),
+            schema_id, tagged=True)
+        rewritten = carried + new_images
         return self._commit("overwrite", kept + rewritten, rewritten, hit, branch,
-                            {"operation-detail": "update"})
+                            {"operation-detail": "update"},
+                            changes=(new_images, images))
 
     # -- DataFrame-predicate DML (subquery / EXISTS forms) ------------------
 
@@ -1721,11 +1819,15 @@ class Table:
 
         joined = target.join(src, on_expr, "left_outer")
         has_match = F.col(f"s.{_S_PRESENT_COL}").isNotNull()
+        # the probe above proves every target row meets at most one source
+        # row, so each rewritten row has exactly one image to record
+        unique = check_cardinality and bool(matched)
 
         if mor:
             return self._merge_mor(
                 old, dels, target, src, joined, on_expr, has_match, st, schema_id,
-                matched, not_matched, not_matched_by_source, branch, summary)
+                matched, not_matched, not_matched_by_source, branch, summary,
+                unique)
 
         # Copy-on-write: which files must be rewritten? Files with join
         # matches, plus — if there are NOT MATCHED BY SOURCE clauses — files
@@ -1740,25 +1842,38 @@ class Table:
         kept = [f for f in old if f.path not in hit_paths]
 
         new_files: list[DataFile] = []
+        inserted: list[DataFile] = []
+        images: list[DataFile] = []
         if hit:
             rewrite_src = self._read_files(hit, schema_id, with_file_col=False,
                                            delete_files=dels).alias("t")
             j = rewrite_src.join(src, on_expr, "left_outer")
-            new_files += self._write_files(
-                self._apply_merge_clauses(j, st, has_match, matched, not_matched_by_source),
-                schema_id,
-            )
+            rows = self._apply_merge_clauses(
+                j, st, has_match, matched, not_matched_by_source, unique)
+            if unique:
+                carried, inserted, images = self._write_files(
+                    rows, schema_id, tagged=True)
+                new_files += carried + inserted
+            else:
+                new_files += self._write_files(rows, schema_id)
 
         if not_matched:
             inserts = src.join(target, on_expr, "left_anti")
             ins = self._merge_inserts(inserts, st, not_matched)
             if ins is not None:
-                new_files += self._write_files(ins, schema_id)
+                ins_files = self._write_files(ins, schema_id)
+                new_files += ins_files
+                inserted += ins_files
 
         if not hit and not new_files:
             return None
         files = kept + new_files
-        return self._commit("overwrite", files, new_files, hit, branch, summary)
+        # without the probe a target row may meet several source rows and
+        # the rewrite cannot tell its images apart: no record, and the
+        # changelog diffs this commit's files
+        return self._commit("overwrite", files, new_files, hit, branch, summary,
+                            changes=(inserted, images) if unique or not hit
+                            else None)
 
     def _merge_inserts(self, inserts: DataFrame, st: T.StructType,
                        not_matched: list[dict]) -> DataFrame | None:
@@ -1831,32 +1946,45 @@ class Table:
 
     def _apply_merge_clauses(self, joined: DataFrame, st: T.StructType,
                              has_match: Column, matched: list[dict],
-                             nmbs: list[dict]) -> DataFrame:
+                             nmbs: list[dict], tagged: bool) -> DataFrame:
         """First-match-wins cascade over the left-joined (t ⟕ s) rows →
-        surviving target-schema rows (copy-on-write rewrite body)."""
+        surviving target-schema rows (copy-on-write rewrite body); with
+        ``tagged``, every row's images tagged for the change record."""
         action_idx, clauses = self._merge_action_idx(has_match, matched, nmbs)
         with_idx = joined.withColumn("_g_action", action_idx)
         delete_idx = [i for i, cl in clauses if cl.get("action") == "delete"]
         survive = ~F.col("_g_action").isin(delete_idx) if delete_idx else F.lit(True)
-        return with_idx.filter(survive).select(self._merge_out_cols(st, clauses))
+        out_cols = self._merge_out_cols(st, clauses)
+        if tagged:
+            return _tag_rows(
+                with_idx, F.col("_g_action") >= 0, survive, out_cols,
+                [F.col(f"t.{f.name}").cast(f.dataType).alias(f.name)
+                 for f in st.fields])
+        return with_idx.filter(survive).select(out_cols)
 
     def _merge_mor(self, old: list[DataFile], dels: list[DeleteFile],
                    target: DataFrame, src: DataFrame, joined: DataFrame,
                    on_expr: Column, has_match: Column, st: T.StructType,
                    schema_id: int, matched: list[dict], not_matched: list[dict],
-                   nmbs: list[dict], branch: str, summary: dict) -> Snapshot | None:
+                   nmbs: list[dict], branch: str, summary: dict,
+                   unique: bool) -> Snapshot | None:
         """Merge-on-read MERGE: no data file is rewritten. Every row claimed
         by a MATCHED / NOT MATCHED BY SOURCE clause gets a position-delete
-        entry; UPDATE clauses additionally append the updated row image;
-        NOT MATCHED inserts append as usual. At scale this turns MERGE's
-        write cost from O(touched files) into O(changed rows)."""
+        entry carrying its old image; UPDATE clauses additionally append
+        the updated row image; NOT MATCHED inserts append as usual. At
+        scale this turns MERGE's write cost from O(touched files) into
+        O(changed rows). Unless ``unique`` (the cardinality probe ran), a
+        target row claimed through several source rows is entered once."""
         action_idx, clauses = self._merge_action_idx(has_match, matched, nmbs)
         affected = joined.withColumn("_g_action", action_idx).filter(
             F.col("_g_action") >= 0).persist()
         try:
             entries = affected.select(
                 F.col(f"t.{_FILE_COL}").alias("file_path"),
-                F.col(f"t.{_POS_COL}").alias("pos"))
+                F.col(f"t.{_POS_COL}").alias("pos"),
+                _row_image(st, "t."))
+            if not unique:
+                entries = entries.dropDuplicates(["file_path", "pos"])
             new_dels = self._write_delete_files(entries)
             new_files: list[DataFile] = []
             update_idx = [i for i, cl in clauses if cl.get("action") == "update"]
@@ -1875,7 +2003,8 @@ class Table:
             return None
         return self._commit("overwrite", old + new_files, new_files, [], branch,
                             {**summary, "added-delete-files": str(len(new_dels))},
-                            delete_files=dels + new_dels)
+                            delete_files=dels + new_dels,
+                            changes=(new_files, new_dels))
 
     # -- metadata tables ---------------------------------------------------
 
@@ -2069,8 +2198,9 @@ class Table:
         """The ``position_deletes`` metadata table: every (file_path, pos)
         entry in the current snapshot's delete files, with the target
         file's partition and the delete file that holds the entry —
-        docs/spark-queries.md:381-390 (``row`` is NULL: this format
-        stores position deletes only, not deleted row images)."""
+        docs/spark-queries.md:381-390. ``row`` is NULL here: the deleted
+        row images a delete file may carry are read by the changelog, and
+        compacted delete files have none."""
         schema = ("file_path string, pos bigint, row string, "
                   "partition map<string,string>, spec_id int, "
                   "delete_file_path string")
@@ -2079,7 +2209,7 @@ class Table:
             return self.spark.createDataFrame([], schema)
         out = None
         for d in snap.delete_files:
-            part = (self.spark.read
+            part = (self.spark.read.schema(_DELETE_SCHEMA)
                     .parquet(os.path.join(self.location, d.path))
                     .withColumn("delete_file_path", F.lit(d.path)))
             out = part if out is None else out.unionByName(part)
@@ -2127,10 +2257,13 @@ class Table:
     # -- maintenance helpers used by procedures ----------------------------
 
     def live_file_paths(self) -> set[str]:
+        """Every file under data/ some snapshot references: data files,
+        delete files and change-record files."""
         out: set[str] = set()
         for s in self.metadata.snapshots:
             out.update(f.path for f in s.files)
             out.update(f.path for f in s.delete_files)
+            out.update(s.change_paths())
         return out
 
     def data_dir(self) -> str:

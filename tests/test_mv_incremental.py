@@ -1305,3 +1305,29 @@ def test_delta_and_incremental_equal_full_recompute_under_random_dml(
             got = {tuple(r) for r in engine.mv.backing_df(
                 engine.mv_catalog.get(name)).collect()}
             assert got == expected(name), (op, mode, name)
+
+
+def test_refresh_releases_its_changelog_pins(engine):
+    """A long-lived session that refreshes repeatedly holds no changelog
+    checkpoint for it: ten DELTA and INCREMENTAL refreshes over
+    copy-on-write UPDATE windows (netted, so checkpointed) leave the pin
+    ledger as it was, and every view still equals a full recompute."""
+    from iceberg_demo_spark import cache
+
+    t = _setup(engine, ROWS)
+    engine.sql(MV_SQL)
+    engine.sql("CREATE MATERIALIZED VIEW pin_mv AS SELECT region, "
+               "sum(amount) AS total, count(amount) AS na, count(*) AS n "
+               "FROM db_sales GROUP BY region")
+    n_pins = len(cache._PINS)
+    for i in range(5):
+        t.update_where({"amount": f"amount + {i + 1}"},
+                       "region IN ('east', 'north')")
+        for name, mode in (("pin_mv", "DELTA"), ("inc_mv", "INCREMENTAL")):
+            engine.sql(f"REFRESH MATERIALIZED VIEW {name} {mode}")
+            assert engine.mv.last_refresh_mode == mode.lower(), (
+                engine.mv.last_refresh_fallback_reason)
+            assert len(cache._PINS) == n_pins
+        assert _mv_rows(engine, "inc_mv") == _expected(engine, t)
+        assert _mv_rows(engine, "pin_mv") == {
+            (r, s, n, n) for r, s, n, _lo in _expected(engine, t)}
