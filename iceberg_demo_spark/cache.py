@@ -97,20 +97,11 @@ def pin_checkpoint_lazy(df: DataFrame) -> DataFrame:
 
 def pin_mark() -> int:
     """Snapshot the ledger length so a BUILDER running inside a gate can
-    release only its own pins (:func:`release_pins_since`) without
-    touching pins an enclosing caller registered earlier — calling the
-    global :func:`release_pins` inside a gate would free still-unconsumed
-    checkpoint-backed frames (ADVICE r10)."""
+    release only its own pins (``release_pins(mark)``) without touching
+    pins an enclosing caller registered earlier — releasing every pin
+    inside a gate would free still-unconsumed checkpoint-backed frames
+    (ADVICE r10)."""
     return len(_PINS)
-
-
-def release_pins_since(mark: int, blocking: bool = False) -> int:
-    """Unpersist only the pins registered after :func:`pin_mark`
-    returned ``mark`` (newest first); returns the count released."""
-    n = max(len(_PINS) - mark, 0)
-    for _ in range(n):
-        _release_one(_PINS.pop(), blocking)
-    return n
 
 
 def _release_one(entry: tuple[str, DataFrame], blocking: bool) -> None:
@@ -126,8 +117,9 @@ def _release_one(entry: tuple[str, DataFrame], blocking: bool) -> None:
         pass
 
 
-def release_pins(blocking: bool = False) -> int:
-    """Unpersist every registered pin (newest first); returns the count.
+def release_pins(mark: int = 0, blocking: bool = False) -> int:
+    """Unpersist the pins registered after :func:`pin_mark` returned
+    ``mark`` — every pin by default — newest first; returns the count.
 
     ``DataFrame.unpersist()`` only reaches CacheManager entries, so a
     checkpointed frame's blocks (persisted on the INTERNAL RDD behind
@@ -136,7 +128,7 @@ def release_pins(blocking: bool = False) -> int:
     the harness-boundary contract. Safe to call repeatedly;
     unpersisting an already-released or self-unpersisted frame is a
     no-op."""
-    n = len(_PINS)
-    while _PINS:
+    n = max(len(_PINS) - mark, 0)
+    for _ in range(n):
         _release_one(_PINS.pop(), blocking)
     return n

@@ -861,8 +861,8 @@ class Engine:
         one WHERE) the WHERE text rides along as ``prune_where`` so the
         bound scan drops partition-unmatchable files driver-side — the
         hidden-partition pruning an Iceberg catalog gives Spark SQL.
-        Pruning is purely subtractive and regex-conservative
-        (`_partition_allowed`): anything it can't prove keeps its files,
+        Pruning is purely subtractive and conservative
+        (`Table._prune_cons`): anything it can't prove keeps its files,
         and the SQL WHERE still filters row-wise, so semantics are
         unchanged in every case.
 

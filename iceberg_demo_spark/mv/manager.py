@@ -13,7 +13,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from iceberg_demo_spark.cache import pin_mark, release_pins_since
+from iceberg_demo_spark import cache
 from iceberg_demo_spark.mv.catalog import MaterializedView, MVCatalog
 from iceberg_demo_spark.mv.parser import QueryInfo, parse_select, ParseError
 from iceberg_demo_spark.tables.catalog import Catalog
@@ -590,11 +590,11 @@ class MVManager:
         mv = self.mv_catalog.get(name)
         if mv is None:
             raise ValueError(f"Materialized view {name} does not exist")
-        mark = pin_mark()
+        mark = cache.pin_mark()
         try:
             return self._refresh(mv, incremental, delta)
         finally:
-            release_pins_since(mark)
+            cache.release_pins(mark)
 
     def _refresh(self, mv: MaterializedView, incremental: bool,
                  delta: bool) -> MaterializedView:

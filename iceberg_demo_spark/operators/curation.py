@@ -2803,8 +2803,8 @@ def ensure_curation_state(spark: SparkSession, sf_dir: str) -> str:
     # this builder runs INSIDE gates, so it must release only ITS OWN
     # pins — the global release would free checkpoint-backed frames an
     # enclosing caller still depends on (ADVICE r10)
-    from iceberg_demo_spark.cache import pin_mark, release_pins_since
-    _mark = pin_mark()
+    from iceberg_demo_spark import cache
+    _mark = cache.pin_mark()
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     base = docs.filter("doc_id % 5 <> 0")
     lm_ppm(lm_bigrams(base)).write.mode("overwrite").parquet(
@@ -2860,7 +2860,7 @@ def ensure_curation_state(spark: SparkSession, sf_dir: str) -> str:
         "n BIGINT, m BIGINT, k BIGINT, fp_bound_bps BIGINT"
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "geom"))
-    release_pins_since(_mark)
+    cache.release_pins(_mark)
     write_index_manifest(path, sf_dir, ("documents",))
     return path
 

@@ -208,28 +208,36 @@ _ORPHAN_DEFAULT_AGE_MS = 3 * 24 * 3600 * 1000
 
 def remove_orphan_files(table: Table, older_than_ms: int | None = None,
                         dry_run: bool = False) -> list[str]:
-    """Files under data/ not referenced by ANY snapshot — as data, delete
-    or change-record file (docs/spark-procedures.md:304-378).
-    ``older_than_ms`` defaults to
-    now − 3 days — deleting younger files could race a concurrent
-    in-flight write whose commit hasn't landed yet."""
+    """Files not referenced by ANY snapshot (docs/spark-procedures.md:
+    304-378): data, delete and change-record files under data/, and
+    manifests and manifest lists under metadata/ — a commit that failed
+    before its metadata JSON landed leaves both behind. Metadata JSON
+    versions and the version hint are never touched. ``older_than_ms``
+    defaults to now − 3 days — deleting younger files could race a
+    concurrent in-flight write whose commit hasn't landed yet."""
     table.check_writable("remove_orphan_files")
     if older_than_ms is None:
         import time as _time
         older_than_ms = int(_time.time() * 1000) - _ORPHAN_DEFAULT_AGE_MS
     live = table.live_file_paths()
+    for s in table.metadata.snapshots:
+        live |= s.metadata_paths()
+    candidates = [(root, n) for root, _d, names in os.walk(table.data_dir())
+                  for n in names if n.endswith(".parquet")]
+    md = table.metadata.metadata_dir()
+    candidates += [(md, n) for n in os.listdir(md)
+                   if n.startswith("manifest-") and n.endswith(".json")]
     orphans = []
-    for root, _d, names in os.walk(table.data_dir()):
-        for n in names:
-            ap = os.path.join(root, n)
-            rel = os.path.relpath(ap, table.location)
-            if rel in live or not n.endswith(".parquet"):
-                continue
-            if older_than_ms is not None and os.path.getmtime(ap) * 1000 >= older_than_ms:
-                continue
-            orphans.append(rel)
-            if not dry_run:
-                os.remove(ap)
+    for root, n in candidates:
+        ap = os.path.join(root, n)
+        rel = os.path.relpath(ap, table.location)
+        if rel in live:
+            continue
+        if older_than_ms is not None and os.path.getmtime(ap) * 1000 >= older_than_ms:
+            continue
+        orphans.append(rel)
+        if not dry_run:
+            os.remove(ap)
     return sorted(orphans)
 
 

@@ -35,8 +35,10 @@ from __future__ import annotations
 
 import functools
 import os
+import re
 import shutil
 import uuid
+from decimal import Decimal, InvalidOperation
 from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -80,6 +82,25 @@ _DELETE_ENTRY_BYTES = 128
 
 #: schema of a position-delete file (Iceberg v2 position deletes)
 _DELETE_SCHEMA = "file_path string, pos bigint"
+
+#: the literals file pruning understands: '…' without an embedded quote,
+#: or a plain decimal number
+_LITERAL = r"(?:'([^']*)'|(-?\d+(?:\.\d+)?))"
+#: any quoted SQL string, '' escapes included: masked before looking for
+#: keywords, so an OR or BETWEEN inside a string value is never seen
+_QUOTED = r"'(?:[^']|'')*'"
+_CMP = re.compile(rf"\s*(\w+)\s*(>=|<=|>|<|=)\s*{_LITERAL}\s*")
+_IN = re.compile(r"\s*(\w+)\s+in\s*\(([^)]*)\)\s*", re.IGNORECASE)
+_ITEM = re.compile(rf"\s*{_LITERAL}\s*")
+_BETWEEN = re.compile(
+    rf"{_QUOTED}|\b(\w+)\s+(not\s+)?between\s+{_LITERAL}\s+and\s+"
+    rf"{_LITERAL}", re.IGNORECASE)
+_OPS = {"=": "eq", ">=": "ge", "<=": "le", ">": "gt", "<": "lt"}
+
+
+def _lit(quoted: str | None, number: str | None) -> tuple[str, bool]:
+    """A matched _LITERAL as (text, quoted)."""
+    return (quoted, True) if quoted is not None else (number, False)
 
 
 class ReadOnlyTableError(Exception):
@@ -418,13 +439,15 @@ class Table:
         map here: VERSION AS OF -> snapshot_id or branch/tag name,
         TIMESTAMP AS OF -> as_of_timestamp_ms).
 
-        ``where`` (round 5): a predicate applied to the scan. When given as
-        SQL text, its partition-aligned conjuncts drive driver-side FILE
-        pruning via the hidden partition spec (`_prune_files`) BEFORE the
-        read — the Iceberg scan-planning behavior — so a partition-aligned
-        read opens O(partition) files at any table size; the full predicate
-        is then still applied row-wise, so semantics never depend on how
-        much pruning applied.
+        ``where``: a predicate applied to the scan. When given as SQL
+        text, it is parsed once into depth-0 conjuncts that prune
+        driver-side BEFORE the read (`_pruned_snapshot_files`): whole
+        manifests by their partition and column-bound summaries, then
+        files by their hidden-partition values and column min/max bounds
+        — the Iceberg scan-planning behavior — so a partition-aligned or
+        selective read opens O(matching files) at any table size. The
+        full predicate is then still applied row-wise, so semantics never
+        depend on how much pruning applied.
 
         ``prune_where``: pruning ONLY — the caller re-applies the real
         predicate itself (Engine.sql's SELECT path, where the SQL WHERE
@@ -727,7 +750,7 @@ class Table:
         "decimal": "num", "date": "date",
         "timestamp": "ts", "timestamp_ltz": "ts",
         # NTZ timestamps compare as tz-FREE wall-clock micros — a distinct
-        # kind so _stats_lit never routes their literals through the
+        # kind so _literal never routes their literals through the
         # session timezone (that wrongly pruned matching files under any
         # non-UTC spark.sql.session.timeZone).
         "timestamp_ntz": "tsntz",
@@ -1134,346 +1157,149 @@ class Table:
         rows = df.filter(F.coalesce(cond, F.lit(False))).select(_FILE_COL).distinct().collect()
         return {r[_FILE_COL] for r in rows}
 
-    def _prune_files(self, files: list[DataFile], cond_text: str | None) -> list[DataFile]:
-        """Driver-side partition pruning: top-level conjuncts of the form
-        ``col = 'lit'`` / ``col IN (...)`` on ANY partition source column
-        restrict the candidate file set before any scan. Identity values
-        match directly; transform partitions (days/bucket/truncate/...) are
-        handled by evaluating the transform ON THE LITERAL with a one-row
-        Spark job — exact for hash buckets too. At 100 TB this is what turns
-        a partition-aligned DELETE into an O(partition) operation instead of
-        O(table)."""
-        allowed = self._partition_allowed(cond_text)
-        ranges = self._partition_range_cons(cond_text)
-        scons = self._stats_cons(cond_text)
-        if not allowed and not ranges and not scons:
-            return files
-        files = self._apply_partition_filter(files, allowed, ranges)
-        if scons:
-            files = [f for f in files if self._passes_stats(f, scons)]
-        return files
+    # -- file pruning --------------------------------------------------------
 
-    @staticmethod
-    def _has_top_level_or(cond_text: str) -> bool:
-        """A depth-0 OR makes every AND-split 'conjunct' conditional —
-        split_conjuncts has no OR-precedence awareness, so treating the
-        pieces as required constraints would prune files that satisfy only
-        the other OR branch (round-5 review fix: pruning must bail)."""
-        import re as _re
-
-        s = _re.sub(r"'(?:[^']|'')*'", "''", cond_text)
-        depth = 0
-        for m in _re.finditer(r"[()]|\bor\b", s, _re.IGNORECASE):
-            tok = m.group(0)
-            if tok == "(":
-                depth += 1
-            elif tok == ")":
-                depth -= 1
-            elif depth == 0:
-                return True
-        return False
-
-    def _partition_allowed(self, cond_text: str | None) -> dict[str, set[str]]:
-        """Partition-col → admissible value set, derived from the
-        predicate's top-level equality/IN conjuncts; empty dict when no
-        pruning applies (including any depth-0 OR — see
-        _has_top_level_or)."""
-        if not cond_text or not self.metadata.partition_spec:
-            return {}
-        if self._has_top_level_or(cond_text):
-            return {}
-        import re as _re
-
-        from iceberg_demo_spark.mv.parser import split_conjuncts
-
-        by_source: dict[str, list[PartitionField]] = {}
-        for p in self.metadata.partition_spec:
-            by_source.setdefault(p.source.lower(), []).append(p)
-        allowed: dict[str, set[str]] = {}
-        try:
-            conjuncts = split_conjuncts(cond_text)
-        except Exception:
-            return {}
-        for c in conjuncts:
-            vals: set[str] | None = None
-            any_unquoted = False
-            m = _re.fullmatch(r"\s*(\w+)\s*=\s*'([^']*)'\s*", c)
-            if m:
-                vals = {m.group(2)}
-            else:
-                m = _re.fullmatch(r"\s*(\w+)\s*=\s*(-?\d+(?:\.\d+)?)\s*", c)
-                if m:
-                    vals = {m.group(2)}
-                    any_unquoted = True
-                else:
-                    m = _re.fullmatch(r"\s*(\w+)\s+in\s*\(([^)]*)\)\s*", c,
-                                      _re.IGNORECASE)
-                    if m:
-                        items = [v.strip() for v in m.group(2).split(",")]
-                        any_unquoted = any(not v.startswith("'")
-                                           for v in items)
-                        vals = {v.strip("'") for v in items}
-            if m is None or vals is None or m.group(1).lower() not in by_source:
-                continue
-            for p in by_source[m.group(1).lower()]:
-                src_t = self.metadata.field_by_name(p.source).type.lower()
-                if any_unquoted and src_t.startswith(
-                        ("string", "varchar", "char")):
-                    # `stringcol = 5` coerces the COLUMN numerically in
-                    # SQL ('05' = 5 is true); string-compare pruning is
-                    # unsound — keep all files (round-5 review fix)
-                    continue
-                # ALWAYS canonicalize through the typed cast (identity
-                # included): '5.0' = a bigint partition must match the
-                # directory value "5", not the literal's spelling
-                tvals = self._eval_transform(p, vals)
-                if not tvals:
-                    # None (couldn't evaluate) and empty (every literal
-                    # cast to NULL — possible with ansi.enabled=false and
-                    # an unparsed IN-subquery string) both mean "no
-                    # provable constraint"; an empty set must NOT become
-                    # allowed[pcol] = set(), which would prune every file
-                    # (round-6 ADVICE fix)
-                    continue
-                if p.partition_col in allowed:
-                    allowed[p.partition_col] &= tvals
-                else:
-                    allowed[p.partition_col] = set(tvals)
-        return allowed
-
-    @staticmethod
-    def _rewrite_between(cond_text: str) -> str:
-        """Rewrite ``col BETWEEN a AND b`` to the two comparisons so the
-        embedded AND is not mistaken for a conjunct boundary (NOT BETWEEN
-        is left untouched — a negated range can't prune conjunctively)."""
-        import re as _re
-
-        lit = r"(?:'([^']*)'|(-?\d+(?:\.\d+)?))"
-
-        def _unbetween(m: _re.Match) -> str:
-            if m.group(2):
-                return m.group(0)
-            col = m.group(1)
-            lo = f"'{m.group(3)}'" if m.group(3) is not None else m.group(4)
-            hi = f"'{m.group(5)}'" if m.group(5) is not None else m.group(6)
-            return f"{col} >= {lo} AND {col} <= {hi}"
-
-        return _re.sub(
-            rf"(?i)\b(\w+)\s+(not\s+)?between\s+{lit}\s+and\s+{lit}",
-            _unbetween, cond_text)
-
-    #: transforms monotone non-decreasing in the source value — safe to
-    #: prune with range predicates at the transform level (bucket is NOT)
-    _MONOTONE = ("identity", "year", "years", "month", "months", "day",
-                 "days", "hour", "hours")
+    #: transforms monotone non-decreasing in the source value, with the
+    #: number of integer fields of their yyyy[-MM[-dd[-HH]]] rendering;
+    #: identity and truncate are monotone too, bucket is not
+    _TIME_FIELDS = {"year": 1, "years": 1, "month": 2, "months": 2,
+                    "day": 3, "days": 3, "hour": 4, "hours": 4}
     _NUMERIC_TYPES = ("tinyint", "smallint", "int", "integer", "bigint",
                       "long", "float", "double", "real", "decimal")
 
-    def _partition_range_cons(
-            self, cond_text: str | None
-    ) -> dict[str, list[tuple[str, str, str]]]:
-        """Range pruning constraints (round 5): partition-col →
-        [(op∈{ge,le}, transformed bound, numeric?)] derived from top-level
-        ``col >/>=/</<= lit`` and ``col BETWEEN a AND b`` conjuncts on
-        MONOTONE transforms (identity + the time transforms; year/month/
-        day/hour values are compared as parsed integer tuples, so order
-        holds for any year width). Strict ops weaken to inclusive at the transform
-        level — monotone transforms aren't injective — which is exactly
-        the conservative direction: pruning may keep extra files, never
-        drop a matching one."""
-        if not cond_text or not self.metadata.partition_spec:
-            return {}
-        if self._has_top_level_or(cond_text):
-            return {}
-        import re as _re
-
-        from iceberg_demo_spark.mv.parser import split_conjuncts
-
-        by_source: dict[str, list[PartitionField]] = {}
-        for p in self.metadata.partition_spec:
-            if p.transform in self._MONOTONE or p.transform.startswith(
-                    "truncate["):
-                by_source.setdefault(p.source.lower(), []).append(p)
-        if not by_source:
-            return {}
-        lit = r"(?:'([^']*)'|(-?\d+(?:\.\d+)?))"
-        cons: dict[str, list[tuple[str, str, str]]] = {}
-
-        cond_text = self._rewrite_between(cond_text)
-        try:
-            conjuncts = split_conjuncts(cond_text)
-        except Exception:
-            return {}
-
-        def add(col: str, op: str, raw: str, quoted: bool) -> None:
-            for p in by_source.get(col.lower(), []):
-                src_t = self.metadata.field_by_name(p.source).type.lower()
-                if not quoted and src_t.startswith(
-                        ("string", "varchar", "char")):
-                    # `stringcol > 5` coerces the COLUMN numerically in
-                    # SQL; a lexicographic prune against '5' would drop
-                    # numerically-matching files like '10' (round-5
-                    # review fix) — keep all files for this conjunct
-                    continue
-                tv = self._eval_transform(p, {raw})
-                if not tv:
-                    continue
-                if (p.transform == "identity"
-                        or p.transform.startswith("truncate[")) and any(
-                        src_t.startswith(t) for t in self._NUMERIC_TYPES):
-                    kind = "num"
-                elif p.transform in ("year", "years", "month", "months",
-                                     "day", "days", "hour", "hours"):
-                    # time transforms render yyyy[-MM[-dd[-HH]]]; compare
-                    # as integer tuples, not lexicographically, so a
-                    # 5-digit year can't sort before '9999' (ADVICE fix)
-                    kind = "time"
-                else:
-                    kind = "str"
-                cons.setdefault(p.partition_col, []).append(
-                    (op, next(iter(tv)), kind))
-
-        for c in conjuncts:
-            m = _re.fullmatch(rf"\s*(\w+)\s*(>=|<=|>|<)\s*{lit}\s*", c)
-            if m:
-                quoted = m.group(3) is not None
-                raw = m.group(3) if quoted else m.group(4)
-                add(m.group(1), "ge" if m.group(2)[0] == ">" else "le",
-                    raw, quoted)
-        return cons
-
     @staticmethod
-    def _passes_ranges(value: str,
-                       cons: list[tuple[str, str, str]]) -> bool:
-        import re as _re
-
-        for op, bound, kind in cons:
-            if kind == "num":
-                try:
-                    v, b = float(value), float(bound)
-                except (TypeError, ValueError):
-                    continue  # can't prove a violation — keep
-            elif kind == "time":
-                # yyyy[-MM[-dd[-HH]]] → ordered int tuples; shapes that
-                # don't parse identically can't prove a violation — keep
-                v = tuple(int(g) for g in _re.findall(r"\d+", value or ""))
-                b = tuple(int(g) for g in _re.findall(r"\d+", bound or ""))
-                if not v or len(v) != len(b):
-                    continue
-            else:
-                v, b = value, bound
-            if op == "ge" and not v >= b:
-                return False
-            if op == "le" and not v <= b:
-                return False
-        return True
-
-    @classmethod
-    def _apply_partition_filter(
-            cls, files: list[DataFile], allowed: dict[str, set[str]],
-            ranges: dict[str, list[tuple[str, str, str]]] | None = None,
-    ) -> list[DataFile]:
-        out = []
-        for f in files:
-            keep = True
-            for pcol, vals in allowed.items():
-                if pcol in f.partition and f.partition[pcol] not in vals:
-                    keep = False
-                    break
-            if keep and ranges:
-                for pcol, cons in ranges.items():
-                    if pcol in f.partition and not cls._passes_ranges(
-                            f.partition[pcol], cons):
-                        keep = False
-                        break
-            if keep:
-                out.append(f)
-        return out
-
-    def _stats_cons(
-            self, cond_text: str | None
-    ) -> list[tuple[str, str, list, str]]:
-        """File-skipping constraints from per-file column bounds (round
-        6 — the reference relies on the same manifest
-        ``lower_bounds``/``upper_bounds`` for min/max skipping, SURVEY
-        §4.2): top-level ``col =/>/>=/</<=/IN lit`` conjuncts on ANY
-        stats-kind column of the CURRENT schema, resolved to string
-        field ids so files written before a rename still prune. Returns
-        [(field_id, op, parsed literals, kind)]. Everything unprovable
-        is skipped — stats pruning is purely subtractive, the row-wise
-        filter still applies. This is the 100 TB lever partition pruning
-        can't reach: a selective predicate on a non-partition column
-        skips whole FILES (and, via manifest bound summaries, whole
-        manifests) instead of scanning every live file."""
+    def _conjuncts(cond_text: str | None) -> list[tuple[str, str, list]]:
+        """The prunable depth-0 conjuncts of a WHERE text, as ``(column,
+        op, [(literal, quoted)])`` with op one of eq, in, ge, gt, le, lt;
+        ``col BETWEEN a AND b`` becomes ge + le (NOT BETWEEN is skipped —
+        a negated range can't prune conjunctively). A conjunct of any
+        other shape (an expression, a qualified column, an IN item that
+        is not a literal, such as a subquery) is skipped, which only
+        keeps more files. A depth-0 OR makes every piece conditional and
+        an unsplittable text proves nothing: both give ``[]``."""
         if not cond_text:
             return []
-        if self._has_top_level_or(cond_text):
-            return []
-        import re as _re
+        depth = 0
+        for m in re.finditer(r"[()]|\bor\b", re.sub(_QUOTED, "''", cond_text),
+                             re.IGNORECASE):
+            if m.group(0) == "(":
+                depth += 1
+            elif m.group(0) == ")":
+                depth -= 1
+            elif depth == 0:
+                return []
+
+        def unbetween(m: re.Match) -> str:
+            if m.group(1) is None or m.group(2):
+                return m.group(0)  # a quoted literal, or NOT BETWEEN
+            lo = f"'{m.group(3)}'" if m.group(3) is not None else m.group(4)
+            hi = f"'{m.group(5)}'" if m.group(5) is not None else m.group(6)
+            return f"{m.group(1)} >= {lo} AND {m.group(1)} <= {hi}"
 
         from iceberg_demo_spark.mv.parser import split_conjuncts
 
-        fields = {f.name.lower(): f for f in self.metadata.schema}
         try:
-            conjuncts = split_conjuncts(self._rewrite_between(cond_text))
+            pieces = split_conjuncts(_BETWEEN.sub(unbetween, cond_text))
         except Exception:
             return []
-        _OPS = {"=": "eq", ">=": "ge", "<=": "le", ">": "gt", "<": "lt"}
-        lit = r"(?:'([^']*)'|(-?\d+(?:\.\d+)?))"
-        cons: list[tuple[str, str, list, str]] = []
-        for c in conjuncts:
-            m = _re.fullmatch(rf"\s*(\w+)\s*(>=|<=|>|<|=)\s*{lit}\s*", c)
+        out = []
+        for c in pieces:
+            m = _CMP.fullmatch(c)
             if m:
-                col, op = m.group(1), _OPS[m.group(2)]
-                raws = [(m.group(3) if m.group(3) is not None
-                         else m.group(4), m.group(3) is not None)]
-            else:
-                m = _re.fullmatch(r"\s*(\w+)\s+in\s*\(([^)]*)\)\s*", c,
-                                  _re.IGNORECASE)
-                if not m:
-                    continue
-                col, op = m.group(1), "in"
-                raws = []
-                for item in m.group(2).split(","):
-                    item = item.strip()
-                    im = _re.fullmatch(r"'([^']*)'", item)
-                    if im:
-                        raws.append((im.group(1), True))
-                    elif _re.fullmatch(r"-?\d+(?:\.\d+)?", item):
-                        raws.append((item, False))
-                    else:
-                        raws = None  # subquery / expression — bail
-                        break
-                if not raws:
-                    continue
-            f = fields.get(col.lower())
-            kind = self._stats_kind(f.type) if f else None
-            if kind is None:
+                out.append((m.group(1), _OPS[m.group(2)],
+                            [_lit(m.group(3), m.group(4))]))
                 continue
-            parsed = [self._stats_lit(kind, raw, quoted)
-                      for raw, quoted in raws]
-            if any(p is None for p in parsed):
-                continue  # one unprovable literal poisons the conjunct
-            cons.append((str(f.field_id), op, parsed, kind))
-        return cons
+            m = _IN.fullmatch(c)
+            items = ([_ITEM.fullmatch(i) for i in m.group(2).split(",")]
+                     if m else [])
+            if items and all(items):
+                out.append((m.group(1), "in",
+                            [_lit(i.group(1), i.group(2)) for i in items]))
+        return out
 
-    def _stats_lit(self, kind: str, raw: str, quoted: bool):
-        """Parse a predicate literal into the kind's comparison domain;
-        None = not provably comparable (no pruning on this conjunct)."""
+    def _prune_cons(self, cond_text: str | None):
+        """The pruning constraints of a WHERE text, built once per prune:
+        ``(parts, stats)``, or None when nothing can prune.
+
+        ``parts`` maps a partition column to ``[(op, values, kind)]``,
+        checked against a file's partition value ``v`` as the interval
+        ``[v, v]``. eq/IN on any transform gives the exact transformed
+        value set (an ``in`` over strings): the transform is evaluated ON
+        THE LITERAL with the write path's own expression (one local job,
+        no table data), exact even for hash buckets. A range on a
+        monotone transform gives an inclusive bound on the transformed
+        literal — strict ops weaken, as monotone transforms aren't
+        injective.
+
+        ``stats`` holds ``(field id, op, literals, kind)`` for every
+        conjunct on a stats-kind column of the current schema, checked
+        against each file's ``lower``/``upper`` bounds; field ids keep
+        files written before a rename prunable.
+
+        Everything unprovable is left out: pruning is purely subtractive
+        and the row-wise filter still applies."""
+        fields = {f.name.lower(): f for f in self.metadata.schema}
+        by_source: dict[str, list[PartitionField]] = {}
+        for p in self.metadata.partition_spec:
+            by_source.setdefault(p.source.lower(), []).append(p)
+        sets: dict[str, set[str]] = {}
+        parts: dict[str, list] = {}
+        stats = []
+        for col, op, lits in self._conjuncts(cond_text):
+            f = fields.get(col.lower())
+            if f is None:
+                continue
+            kind = self._stats_kind(f.type)
+            if kind == "str" and not all(quoted for _, quoted in lits):
+                # `stringcol = 5` coerces the COLUMN numerically in SQL
+                # ('05' = 5 is true): no string comparison can prune it
+                continue
+            raws = {raw for raw, _ in lits}
+            for p in by_source.get(col.lower(), []):
+                if op in ("eq", "in"):
+                    pkind = None
+                elif p.transform in self._TIME_FIELDS:
+                    pkind = p.transform
+                elif p.transform == "identity" or p.transform.startswith(
+                        "truncate["):
+                    pkind = ("num" if f.type.lower().startswith(
+                        self._NUMERIC_TYPES) else "str")
+                else:
+                    continue  # bucket order says nothing about ranges
+                # ALWAYS through the typed cast (identity included): '5.0'
+                # on a bigint partition must match the value "5"
+                tvals = self._eval_transform(p, raws)
+                if not tvals:
+                    # None (couldn't evaluate) and empty (every literal
+                    # cast to NULL) both mean "no provable constraint" —
+                    # an empty value set would prune every file
+                    continue
+                if pkind is None:
+                    sets[p.partition_col] = sets.get(p.partition_col,
+                                                     tvals) & tvals
+                    continue
+                bound = self._domain(pkind, next(iter(tvals)))
+                if bound is not None:
+                    parts.setdefault(p.partition_col, []).append(
+                        ("ge" if op[0] == "g" else "le", [bound], pkind))
+            if kind is not None:
+                parsed = [self._literal(kind, raw, quoted)
+                          for raw, quoted in lits]
+                if None not in parsed:  # one unprovable literal poisons it
+                    stats.append((str(f.field_id), op, parsed, kind))
+        for pcol, vals in sets.items():
+            parts.setdefault(pcol, []).append(("in", vals, "str"))
+        return (parts, stats) if parts or stats else None
+
+    def _literal(self, kind: str, raw: str, quoted: bool):
+        """A predicate literal in a stats kind's comparison domain; None =
+        not provably comparable (no pruning on this conjunct)."""
         import datetime as _dt
-        import re as _re
-        from decimal import Decimal, InvalidOperation
 
         if kind == "num":
-            try:
-                d = Decimal(raw)
-            except (InvalidOperation, ValueError):
-                return None
-            return None if d.is_nan() else d
+            return self._domain(kind, raw)
         if not quoted:
-            # `stringcol = 5` coerces the COLUMN numerically in SQL —
-            # bounds-compare against the literal's spelling is unsound
-            return None
+            return None  # a bare number is no date or timestamp
         if kind == "ts":
             try:
                 v = _dt.datetime.fromisoformat(raw)
@@ -1505,20 +1331,22 @@ class Table:
             d = v - _dt.datetime(1970, 1, 1)
             return (d.days * 86400 + d.seconds) * 10**6 + d.microseconds
         if kind == "date":
-            return raw if _re.fullmatch(r"\d{4}-\d{2}-\d{2}", raw) else None
+            return raw if re.fullmatch(r"\d{4}-\d{2}-\d{2}", raw) else None
         return raw  # str: code-point order on both sides
 
-    @staticmethod
-    def _stats_bound(kind: str, s: str | None):
-        """Parse a stored canonical bound into the comparison domain."""
+    @classmethod
+    def _domain(cls, kind: str, s: str | None):
+        """A stored value — a file bound, a partition value or a
+        transformed literal — in its kind's comparison domain; None =
+        unknown, which never prunes. Time-transform values compare as
+        integer tuples of the transform's width, so a 5-digit year can't
+        sort before '9999' and a value of another shape proves nothing."""
         if s is None:
             return None
         if kind == "num":
-            from decimal import Decimal, InvalidOperation
-
             try:
                 d = Decimal(s)
-            except (InvalidOperation, ValueError):
+            except (InvalidOperation, ValueError, TypeError):
                 return None
             return None if d.is_nan() else d
         if kind in ("ts", "tsntz"):
@@ -1526,10 +1354,13 @@ class Table:
                 return int(s)
             except ValueError:
                 return None
+        if kind in cls._TIME_FIELDS:
+            t = tuple(int(g) for g in re.findall(r"\d+", s))
+            return t if len(t) == cls._TIME_FIELDS[kind] else None
         return s
 
     @staticmethod
-    def _range_admits(lo, up, op: str, lits: list) -> bool:
+    def _range_admits(lo, up, op: str, lits) -> bool:
         """Can a value in [lo, up] (either side None = unknown) satisfy
         ``col <op> lits``? False = provably not → prune."""
         if op in ("eq", "in"):
@@ -1543,24 +1374,47 @@ class Table:
             return lo is None or lo <= lits[0]
         return lo is None or lo < lits[0]  # lt
 
-    def _passes_stats(self, f: DataFile,
-                      cons: list[tuple[str, str, list, str]]) -> bool:
-        for fid, op, lits, kind in cons:
+    @classmethod
+    def _value_admits(cls, value: str, col_cons: list) -> bool:
+        """Whether a partition value satisfies every constraint on its
+        column, as the one-point interval [value, value]."""
+        for op, lits, kind in col_cons:
+            v = cls._domain(kind, value)
+            if not cls._range_admits(v, v, op, lits):
+                return False
+        return True
+
+    def _file_admits(self, f: DataFile, cons) -> bool:
+        """The per-file pruning test, shared by DML planning and scans."""
+        parts, stats = cons
+        for pcol, col_cons in parts.items():
+            if pcol in f.partition and not self._value_admits(
+                    f.partition[pcol], col_cons):
+                return False
+        for fid, op, lits, kind in stats:
             if f.records and f.nulls.get(fid) == f.records:
                 # every value NULL and all these predicate forms are
                 # null-rejecting — no row can match
                 return False
-            lo = self._stats_bound(kind, f.lower.get(fid))
-            up = self._stats_bound(kind, f.upper.get(fid))
-            if lo is None and up is None:
-                continue
-            if not self._range_admits(lo, up, op, lits):
+            if not self._range_admits(self._domain(kind, f.lower.get(fid)),
+                                      self._domain(kind, f.upper.get(fid)),
+                                      op, lits):
                 return False
         return True
 
-    def _manifest_bounds_admit(
-            self, entry: dict,
-            cons: list[tuple[str, str, list, str]]) -> bool:
+    def _prune_files(self, files: list[DataFile],
+                     cond_text: str | None) -> list[DataFile]:
+        """Driver-side file pruning before any scan: the files a WHERE
+        text's partition values and column bounds can't rule out (see
+        _prune_cons). At 100 TB this is what turns a partition-aligned or
+        selective DELETE into an O(matching files) operation instead of
+        O(table)."""
+        cons = self._prune_cons(cond_text)
+        if cons is None:
+            return files
+        return [f for f in files if self._file_admits(f, cons)]
+
+    def _manifest_bounds_admit(self, entry: dict, stats: list) -> bool:
         """Manifest-level min/max skipping on the ``bounds`` summary
         write_manifest rolls up. The rollup ordered values numerically
         iff every bound parsed as a number, so: numeric kinds require
@@ -1569,66 +1423,40 @@ class Table:
         used numeric ordering — admit). Either way the two levels never
         compare under different orderings."""
         b = entry.get("bounds") or {}
-        if not b:
-            return True
-        from decimal import Decimal, InvalidOperation
-
-        def pnum(s) -> bool:
-            try:
-                return not Decimal(s).is_nan()
-            except (InvalidOperation, ValueError, TypeError):
-                return False
-
-        for fid, op, lits, kind in cons:
+        for fid, op, lits, kind in stats:
             pair = b.get(fid)
             if not pair:
                 continue
-            lo_s, hi_s = pair
-            if kind in ("num", "ts", "tsntz"):
-                if not (pnum(lo_s) and pnum(hi_s)):
-                    continue
-                lo = self._stats_bound(kind, lo_s)
-                up = self._stats_bound(kind, hi_s)
-                if lo is None or up is None:
-                    continue
-            else:
-                if pnum(lo_s) and pnum(hi_s):
-                    continue
-                lo, up = lo_s, hi_s
+            numeric = all(self._domain("num", s) is not None for s in pair)
+            if numeric != (kind in ("num", "ts", "tsntz")):
+                continue  # the rollup may have ordered this pair otherwise
+            lo, up = (self._domain(kind, s) for s in pair)
             if not self._range_admits(lo, up, op, lits):
                 return False
         return True
 
     def _pruned_snapshot_files(self, snap: Snapshot,
                                cond_text: str) -> list[DataFile]:
-        """Partition-pruned file list for a snapshot: whole manifests
-        whose partition or column-bound summary proves no match are
-        SKIPPED without loading, so scan planning reads O(matching
-        manifests), not O(all)."""
+        """_prune_files over a snapshot, which first SKIPS whole manifests
+        whose partition or column-bound summary proves no match, so scan
+        planning reads O(matching manifests), not O(all)."""
         from iceberg_demo_spark.tables import format as _fmt
 
-        allowed = self._partition_allowed(cond_text)
-        ranges = self._partition_range_cons(cond_text)
-        scons = self._stats_cons(cond_text)
-        if not allowed and not ranges and not scons:
+        cons = self._prune_cons(cond_text)
+        if cons is None:
             return snap.files
+        parts, stats = cons
         files: list[DataFile] = []
         for m in snap.manifests:
             psum = m.get("partitions") or {}
-            if any(col in psum and not (vals & set(psum[col]))
-                   for col, vals in allowed.items()):
-                continue  # no file in this manifest can match
-            if any(col in psum and not any(
-                    self._passes_ranges(v, cons) for v in psum[col])
-                   for col, cons in ranges.items()):
-                continue  # every summarized value is out of range
-            if scons and not self._manifest_bounds_admit(m, scons):
+            if any(pcol in psum and not any(
+                    self._value_admits(v, col_cons) for v in psum[pcol])
+                   for pcol, col_cons in parts.items()):
+                continue  # no summarized partition value can match
+            if not self._manifest_bounds_admit(m, stats):
                 continue  # column-bound summary proves no match
             files.extend(_fmt.load_manifest(self.location, m["path"]))
-        files = self._apply_partition_filter(files, allowed, ranges)
-        if scons:
-            files = [f for f in files if self._passes_stats(f, scons)]
-        return files
+        return [f for f in files if self._file_admits(f, cons)]
 
     def update_where(self, assignments: dict[str, str | Column],
                      condition: str | Column | None = None,
@@ -1819,9 +1647,10 @@ class Table:
 
         joined = target.join(src, on_expr, "left_outer")
         has_match = F.col(f"s.{_S_PRESENT_COL}").isNotNull()
-        # the probe above proves every target row meets at most one source
-        # row, so each rewritten row has exactly one image to record
-        unique = check_cardinality and bool(matched)
+        # each rewritten row has exactly one image to record: the probe
+        # above proves every target row meets at most one source row, and
+        # without WHEN MATCHED clauses only unmatched rows are claimed
+        unique = check_cardinality or not matched
 
         if mor:
             return self._merge_mor(
@@ -1830,14 +1659,16 @@ class Table:
                 unique)
 
         # Copy-on-write: which files must be rewritten? Files with join
-        # matches, plus — if there are NOT MATCHED BY SOURCE clauses — files
-        # with rows lacking a match (for a selective ON, that is every file;
-        # unavoidable, same as Iceberg).
-        need = F.coalesce(has_match, F.lit(False)) if not not_matched_by_source else F.lit(True)
-        hits = (
-            joined.filter(need).select(F.col(f"t.{_FILE_COL}")).distinct().collect()
-        )
-        hit_paths = {r[_FILE_COL] for r in hits}
+        # matches if there are WHEN MATCHED clauses, plus — if there are NOT
+        # MATCHED BY SOURCE clauses — files with rows lacking a match (for a
+        # selective ON, that is every file; unavoidable, same as Iceberg).
+        # An insert-only MERGE claims no target row and rewrites no file.
+        hit_paths: set[str] = set()
+        if matched or not_matched_by_source:
+            need = (F.lit(True) if not_matched_by_source
+                    else F.coalesce(has_match, F.lit(False)))
+            hit_paths = {r[_FILE_COL] for r in joined.filter(need).select(
+                F.col(f"t.{_FILE_COL}")).distinct().collect()}
         hit = [f for f in old if f.path in hit_paths]
         kept = [f for f in old if f.path not in hit_paths]
 
@@ -1847,7 +1678,19 @@ class Table:
         if hit:
             rewrite_src = self._read_files(hit, schema_id, with_file_col=False,
                                            delete_files=dels).alias("t")
-            j = rewrite_src.join(src, on_expr, "left_outer")
+            if matched:
+                j = rewrite_src.join(src, on_expr, "left_outer")
+            else:
+                # no clause reads a source row: a target row needs only
+                # whether it has a match, once — an outer join would
+                # write it once per matching source row
+                j = (rewrite_src.join(src, on_expr, "left_semi")
+                     .withColumn(_S_PRESENT_COL, F.lit(True))
+                     .unionByName(rewrite_src.join(src, on_expr, "left_anti")
+                                  .withColumn(_S_PRESENT_COL,
+                                              F.lit(None).cast("boolean")))
+                     .alias("t"))
+                has_match = F.col(_S_PRESENT_COL).isNotNull()
             rows = self._apply_merge_clauses(
                 j, st, has_match, matched, not_matched_by_source, unique)
             if unique:

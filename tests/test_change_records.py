@@ -218,7 +218,8 @@ def test_crash_before_metadata_save_leaves_parent_and_reclaims_files(
     """A failure after the data, delete and record files are written but
     before the metadata JSON lands: readers see the parent, the changelog
     and a DELTA window over the head are unaffected, and
-    remove_orphan_files reclaims every file the failed commit wrote."""
+    remove_orphan_files reclaims every file the failed commit wrote, its
+    manifest and manifest list included."""
     for mode in MODES:
         t = _two_file_table(catalog, spark, f"db.cr_crash_{mode[:3]}",
                             {"write.update.mode": mode})
@@ -244,8 +245,18 @@ def test_crash_before_metadata_save_leaves_parent_and_reclaims_files(
                    if n.endswith(".parquet")}
         leftovers = on_disk - live
         assert leftovers, "the failed commit wrote no file"
+        live_meta = set().union(*(s.metadata_paths()
+                                  for s in fresh.metadata.snapshots))
+        meta_leftovers = {os.path.join("metadata", n) for n in os.listdir(
+            fresh.metadata.metadata_dir())
+            if n.startswith("manifest")} - live_meta
+        lists = {p for p in meta_leftovers
+                 if p.startswith("metadata/manifest-list-")}
+        assert lists and meta_leftovers - lists  # a list and its manifest
         assert set(proc.remove_orphan_files(
-            fresh, older_than_ms=now_ms() + 1)) == leftovers
+            fresh, older_than_ms=now_ms() + 1)) == leftovers | meta_leftovers
+        assert not any(os.path.exists(os.path.join(fresh.location, p))
+                       for p in leftovers | meta_leftovers)
         # the next commit and its changelog work on the refreshed handle
         snap = fresh.update_where({"val": "val + 2"}, "id = 6")
         assert snap.summary["deleted-records"] == "1"
@@ -347,3 +358,49 @@ def test_row_level_summary_counts_match_duckdb(catalog, spark, mode):
                    not_matched=[{}])
     assert snap.summary["deleted-records"] == matched
     assert snap.summary["added-records"] == str(int(matched) + inserted)
+
+
+def test_merge_without_matched_clause_matches_duckdb(catalog, spark):
+    """A MERGE without WHEN MATCHED clauses claims no matched target row:
+    an insert-only MERGE rewrites no file, and under NOT MATCHED BY
+    SOURCE a target row met by several source rows is still written
+    once. Copy-on-write and merge-on-read agree with each other and with
+    DuckDB, and their change records equal the whole-file diff."""
+    import duckdb
+
+    src_rows = [(1, "s", 1.0), (1, "s", 1.0), (3, "s", 7.0), (45, "s", 2.0)]
+    nmbs = [{"condition": "t.val > 30", "action": "delete"},
+            {"condition": "t.id % 2 = 0", "action": "update",
+             "set": {"val": "t.val + 100"}}]
+    got = {}
+    for mode in MODES:
+        t = _two_file_table(catalog, spark, f"db.cr_nm_{mode[:3]}",
+                            {"write.merge.mode": mode})
+        start = t.metadata.current_snapshot().snapshot_id
+        before = {f.path for f in t._branch_files("main")}
+        src = spark.createDataFrame(src_rows, SCHEMA)
+        snap = t.merge(src, on="t.id = s.id", not_matched=[{}])
+        assert before <= {f.path for f in snap.files}  # nothing rewritten
+        assert not snap.delete_files
+        t.merge(src, on="t.id = s.id", not_matched_by_source=nmbs)
+        got[mode] = _rows(t.scan())
+        cl = _rows(proc.create_changelog_view(t, "cr_nm_cl",
+                                              start_snapshot_id=start))
+        with _whole_file_diff(t):
+            assert cl == _rows(proc.create_changelog_view(
+                t, "cr_nm_want", start_snapshot_id=start))
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id BIGINT, cat VARCHAR, val DOUBLE)")
+    con.execute("INSERT INTO t SELECT i, CASE WHEN i < 20 THEN 'a' ELSE 'b' "
+                "END, i FROM range(40) r(i)")
+    con.execute("CREATE TABLE s (id BIGINT, cat VARCHAR, val DOUBLE)")
+    con.executemany("INSERT INTO s VALUES (?, ?, ?)", src_rows)
+    con.execute("INSERT INTO t SELECT * FROM s "
+                "WHERE id NOT IN (SELECT id FROM t)")
+    unmatched = "id NOT IN (SELECT id FROM s)"
+    con.execute(f"DELETE FROM t WHERE {unmatched} AND val > 30")
+    con.execute(f"UPDATE t SET val = val + 100 "
+                f"WHERE {unmatched} AND id % 2 = 0")
+    want = sorted(con.execute("SELECT * FROM t").fetchall())
+    assert got["copy-on-write"] == got["merge-on-read"] == want

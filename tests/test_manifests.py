@@ -643,7 +643,7 @@ def test_stats_pruned_planning_budget_100k_files(catalog, monkeypatch):
     batch: planning a stats-pruned scan must (a) open only the ONE
     manifest whose bound rollup admits the predicate — the 9 others are
     skipped at the summary level without loading — and (b) run the
-    _stats_cons + _passes_stats loop over just that manifest's files in
+    per-file _file_admits loop over just that manifest's files in
     bounded wall-time."""
     import time as _time
 

@@ -12,7 +12,7 @@
 2. (low) ``ensure_curation_state`` called the global ``release_pins()``
    inside a gate, freeing checkpoint-backed pins an enclosing caller
    still depended on. Pins are now scoped: ``pin_mark()`` +
-   ``release_pins_since(mark)`` release only the builder's own suffix.
+   ``release_pins(mark)`` release only the builder's own suffix.
 3. (low) the per-doc quality predicate existed in two copies
    (``_pipe_quality_cond`` and an inline restatement in
    ``doc_curation_pipeline``); the pipeline now calls the shared
@@ -176,8 +176,7 @@ def test_bloom_guard_crash_between_index_append_and_fold(spark, tmp_path):
 # -- 2: scoped pin release ---------------------------------------------------
 
 def test_release_pins_since_releases_only_the_suffix(spark):
-    from iceberg_demo_spark.cache import (
-        pin, pin_mark, release_pins, release_pins_since)
+    from iceberg_demo_spark.cache import pin, pin_mark, release_pins
 
     outer = pin(spark.range(10))
     outer.count()
@@ -185,7 +184,7 @@ def test_release_pins_since_releases_only_the_suffix(spark):
     inner = pin(spark.range(5))
     inner.count()
     try:
-        assert release_pins_since(mark) == 1
+        assert release_pins(mark) == 1
         assert inner.storageLevel.useMemory is False
         # the enclosing caller's pin survives the builder's release
         assert outer.storageLevel.useMemory is True

@@ -306,16 +306,6 @@ def test_rfm_survives_single_shuffle_partition(engine):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def test_has_top_level_or_edge_cases():
-    from iceberg_demo_spark.tables.table import Table
-
-    assert Table._has_top_level_or("a = 1 OR b = 2")
-    assert not Table._has_top_level_or("(a = 1 OR b = 2) AND c = 3")
-    assert not Table._has_top_level_or("cat = 'x or y'")  # quoted literal
-    assert not Table._has_top_level_or("a = 1 AND b = 2")
-    assert Table._has_top_level_or("(a = 1) OR (b = 2)")
-
-
 def test_scan_where_accepts_column_predicate(engine):
     t = engine.catalog.create_table(
         "db.colw", "id bigint, cat string", partition_by=[("cat",)])

@@ -9,12 +9,9 @@ flat shadow, requires the WHERE at paren depth 0, terminates the capture
 only at a depth-0 GROUP BY/ORDER BY/LIMIT, and requires the captured
 text paren-balanced.
 
-low — _partition_allowed treated an empty (non-None) transform result as
-a real constraint (allowed[pcol] = set() prunes EVERY file); empty now
-means "no provable constraint".
-
-low — time-transform range bounds compared lexicographically (wrong for
-years >= 10000); now compared as parsed integer tuples.
+The round's two low findings on partition pruning (an empty transform
+result pruned every file; time-transform bounds compared
+lexicographically) are pinned in test_stats_pruning.py.
 """
 
 from __future__ import annotations
@@ -82,60 +79,3 @@ def test_subquery_only_statement_no_outer_prune(engine):
         "SELECT count(*) AS n FROM db.t, "
         "(SELECT v FROM db.side WHERE region = 'EU') s").collect()
     assert got[0]["n"] == 3  # 3 outer rows x 1 subquery row
-
-
-# -- low: empty transform result must not prune every file ------------------
-
-def test_empty_transform_result_keeps_all_files(engine, monkeypatch):
-    t = engine.catalog.create_table(
-        "db.emptyp", "id bigint, cat string", partition_by=[("cat",)])
-    t.append(engine.spark.createDataFrame(
-        [(0, "x"), (1, "y")], schema=t.schema()))
-    files = t._branch_files("main")
-    monkeypatch.setattr(type(t), "_eval_transform",
-                        lambda self, p, vals: set())
-    # the empty transform result must impose NO partition constraint
-    # (an empty allowed-set would prune every file); column-stats
-    # pruning is checked separately and stripped here
-    assert t._partition_allowed("cat = 'x'") == {}
-    import dataclasses
-
-    blind = [dataclasses.replace(f, lower={}, upper={}, nulls={})
-             for f in files]
-    assert t._prune_files(blind, "cat = 'x'") == blind
-
-
-# -- low: time-transform bounds compare as integer tuples -------------------
-
-def test_passes_ranges_time_tuples():
-    from iceberg_demo_spark.tables.table import Table
-
-    # 5-digit year must NOT sort before '9999'
-    assert Table._passes_ranges("10000", [("ge", "9999", "time")])
-    assert not Table._passes_ranges("9998", [("ge", "9999", "time")])
-    assert Table._passes_ranges("2024-03", [("ge", "2023-12", "time")])
-    assert not Table._passes_ranges("2023-11", [("ge", "2023-12", "time")])
-    assert Table._passes_ranges("2024-01-02-03",
-                                [("le", "2024-01-02-04", "time")])
-    # shape mismatch can't prove a violation — keep
-    assert Table._passes_ranges("2024", [("le", "2023-12", "time")])
-    # numeric + plain string kinds unchanged
-    assert Table._passes_ranges("10", [("ge", "9", "num")])
-    assert not Table._passes_ranges("10", [("ge", "9", "str")])
-
-
-def test_time_partition_range_prune_still_correct(engine):
-    """End-to-end: a months-partitioned table pruned with a range
-    predicate returns exactly the right rows."""
-    t = engine.catalog.create_table(
-        "db.tm", "id bigint, ts timestamp",
-        partition_by=[("ts", "month")])
-    t.append(engine.spark.sql(
-        "SELECT * FROM VALUES (1, TIMESTAMP'2023-11-05 00:00:00'), "
-        "(2, TIMESTAMP'2023-12-15 00:00:00'), "
-        "(3, TIMESTAMP'2024-03-20 00:00:00') AS v(id, ts)"))
-    got = t.scan(where="ts >= '2023-12-01 00:00:00'").collect()
-    assert {r["id"] for r in got} == {2, 3}
-    pruned = t._prune_files(t._branch_files("main"),
-                            "ts >= '2023-12-01 00:00:00'")
-    assert len(pruned) == 2

@@ -1,11 +1,12 @@
 """Round-7 ADVICE regressions.
 
 1. (medium) timestamp_ntz bounds pruned through the SESSION timezone:
-   harvested NTZ bounds are wall-clock micros, but ``_stats_lit`` used to
-   route every timestamp literal through ``spark.sql.session.timeZone``,
+   harvested NTZ bounds are wall-clock micros, but the literal parse used
+   to route every timestamp literal through ``spark.sql.session.timeZone``,
    so under any non-UTC zone files containing matching rows were wrongly
    pruned (scans AND DML candidate planning). Fixed with a dedicated
-   ``tsntz`` stats kind whose literal parse is tz-free.
+   ``tsntz`` stats kind whose literal parse is tz-free (the scan-side
+   pins live in test_stats_pruning.py).
 2. (low) ``_stats_kind`` matched declared types by prefix, classifying
    ANSI interval types as numeric via the ``int`` prefix. Now an exact
    leading-token match.
@@ -19,7 +20,6 @@
 
 from __future__ import annotations
 
-import datetime as dt
 import os
 
 import pytest
@@ -41,32 +41,6 @@ def tz_la(spark):
     spark.conf.set("spark.sql.session.timeZone", old)
 
 
-def test_ntz_prune_ignores_session_timezone(engine, tz_la):
-    """The ADVICE repro: one file whose NTZ values match the predicate
-    must be KEPT under a non-UTC session zone (it was pruned to 0/1)."""
-    t = engine.catalog.create_table("db.ntz", "id bigint, ts timestamp_ntz")
-    t.append(engine.spark.sql(
-        "SELECT id, TIMESTAMP_NTZ'2024-06-01 12:00:00' + "
-        "make_interval(0,0,0,0,cast(id AS int),0,0) AS ts "
-        "FROM range(0, 5)").coalesce(1))
-    files = t._branch_files("main")
-    assert len(files) == 1
-    # wall-clock bounds: 2024-06-01T12:00 .. T16:00 as tz-free micros
-    fid = str(next(f.field_id for f in t.metadata.schema if f.name == "ts"))
-    lo = int(files[0].lower[fid])
-    want = int((dt.datetime(2024, 6, 1, 12) - dt.datetime(1970, 1, 1))
-               .total_seconds()) * 10**6
-    assert lo == want
-    # matching predicate keeps the file and rows agree with Spark's filter
-    cond = "ts >= '2024-06-01 12:00:00'"
-    assert len(t._prune_files(files, cond)) == 1
-    assert t.scan(where=cond).count() == 5
-    # a provably-out-of-range predicate still prunes (soundness kept,
-    # not just disabled)
-    assert len(t._prune_files(files, "ts > '2024-06-01 17:00:00'")) == 0
-    assert t.scan(where="ts > '2024-06-01 17:00:00'").count() == 0
-
-
 def test_ntz_dml_candidate_planning_not_mispruned(engine, tz_la):
     """DELETE planning shares the prune path — an NTZ predicate under a
     non-UTC zone must still rewrite the matching file."""
@@ -76,16 +50,6 @@ def test_ntz_dml_candidate_planning_not_mispruned(engine, tz_la):
         "FROM range(0, 4)").coalesce(1))
     t.delete_where("ts = '2024-06-01 12:00:00'")
     assert t.scan().count() == 0
-
-
-def test_ntz_offset_literal_never_proves(engine):
-    # an offset literal vs an NTZ column is not provably comparable —
-    # no pruning on that conjunct
-    lit = Table._stats_lit.__get__(object.__new__(Table))
-    assert lit("tsntz", "2024-06-01 12:00:00+02:00", True) is None
-    assert lit("tsntz", "2024-06-01 12:00:00", True) == int(
-        (dt.datetime(2024, 6, 1, 12) - dt.datetime(1970, 1, 1))
-        .total_seconds()) * 10**6
 
 
 def test_stats_kind_exact_token():
