@@ -39,19 +39,6 @@ def _batch_summary(batch_id: int, checkpoint: str | None = None) -> dict:
     return out
 
 
-def _stamp_batch(table: Table, snap, batch_id: int) -> None:
-    """Post-hoc epoch tag for writers whose commit API cannot carry a
-    summary (the MERGE upsert path — its idempotency comes from the
-    newer-than guard, the stamp is observability). Guarded on the commit
-    actually happening: a no-op batch (MERGE with nothing matched or
-    inserted) returns None, and stamping then would relabel the PREVIOUS
-    batch's snapshot and burn a metadata version for nothing."""
-    if snap is None:
-        return
-    snap.summary["streaming-batch-id"] = str(batch_id)
-    table.metadata.save()
-
-
 def stream_to_table(
     spark: SparkSession,
     source_dir: str,
@@ -276,7 +263,7 @@ def stream_upsert_to_table(
             *[F.desc(c) for c in order_cols])
         latest = (batch_df.withColumn("_rn", F.row_number().over(w))
                   .filter("_rn = 1").drop("_rn"))
-        snap = table.merge(
+        table.merge(
             latest,
             on=" AND ".join(f"t.{c} = s.{c}" for c in key_cols),
             matched=[{"action": "update", "condition": newer,
@@ -284,8 +271,8 @@ def stream_upsert_to_table(
                               for f in latest.schema.fields}}],
             not_matched=[{"values": None}],
             check_cardinality=False,  # latest is unique per key by build
+            summary=_batch_summary(batch_id),
         )
-        _stamp_batch(table, snap, batch_id)
 
     q = (
         df.writeStream.foreachBatch(write_batch)

@@ -236,6 +236,15 @@ class Table:
 
     def drop_column(self, name: str) -> None:
         self.check_writable("ALTER TABLE DROP COLUMN")
+        # Iceberg's rule: a column the current spec, the write order or the
+        # identifier fields name cannot go, or every later write fails
+        md, low = self.metadata, name.lower()
+        if (any(p.source.lower() == low for p in md.partition_spec)
+                or any(o["col"].lower() == low for o in md.sort_order)
+                or any(n.lower() == low for n in md.identifier_field_names)):
+            raise ValueError(
+                f"cannot drop column {name}: the partition spec, write order "
+                "or identifier fields use it")
         self.metadata.new_schema_version()
         if "." in name:
             parent, child = name.rsplit(".", 1)
@@ -253,10 +262,25 @@ class Table:
         self.metadata.save()
 
     def rename_column(self, old: str, new: str) -> None:
+        """Renames the schema field and every reference to it: partition
+        spec sources, write order and identifier fields. Partition field
+        names (and so ``_p_*`` directories) keep their names, as in
+        Iceberg."""
         self.check_writable("ALTER TABLE RENAME COLUMN")
-        self.metadata.new_schema_version()
-        self.metadata.field_by_name(old).name = new
-        self.metadata.save()
+        md = self.metadata
+        md.new_schema_version()
+        f = md.field_by_name(old)
+        was = f.name.lower()
+        f.name = new
+        for p in md.partition_spec:
+            if p.source.lower() == was:
+                p.source = new
+        for o in md.sort_order:
+            if o["col"].lower() == was:
+                o["col"] = new
+        md.identifier_field_names = [
+            new if n.lower() == was else n for n in md.identifier_field_names]
+        md.save()
 
     def alter_column_type(self, name: str, new_type: str) -> None:
         """Widening only (int->bigint, float->double, decimal scale-up) —

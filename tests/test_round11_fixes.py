@@ -663,36 +663,6 @@ def test_curation_chain_final_plan_never_scans_corpus(spark):
     assert "documents.parquet" not in buf.getvalue()
 
 
-# -- tooling: cross-round canary normalization ------------------------------
-
-def test_cross_round_normalization_math(tmp_path):
-    """canary_cross_round_ratio divides this round's mean canary total
-    by the latest earlier artifact's; the shared-subtotal ratio is then
-    normalized by that host-drift factor."""
-    import json
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from quiet_bench import cross_round_normalization
-
-    prev = {"canary_before_total": 2.0, "canary_after_total": 2.2,
-            "queries": {"a": 1.0, "b": 2.0, "c": 3.0}}
-    (tmp_path / "BENCH_QUIET_r10.json").write_text(json.dumps(prev))
-    # diagnostic variants must be skipped, not crash the scan
-    (tmp_path / "BENCH_QUIET_r09_control.json").write_text("{}")
-    payload = {"queries": {"a": 2.0, "b": 4.0, "z": 9.0}}
-    out = cross_round_normalization(str(tmp_path), 11, payload, 4.2)
-    assert out["canary_prev_round"] == 10
-    assert out["canary_prev_total"] == 2.1
-    assert out["canary_cross_round_ratio"] == 2.0
-    assert out["shared_query_count"] == 2  # a, b
-    assert out["shared_ratio_raw"] == 2.0  # 6.0 / 3.0
-    assert out["shared_ratio_normalized"] == 1.0  # pure host drift
-    # no earlier artifact → explicit null marker
-    assert cross_round_normalization(str(tmp_path), 10, payload, 2.0) \
-        == {"canary_prev_round": None}
-
-
 # -- 3: one quality predicate, two tiers ------------------------------------
 
 def test_pipeline_quality_filter_is_the_shared_predicate():

@@ -68,16 +68,23 @@ def test_stats_kind_exact_token():
 def test_noop_merge_batch_does_not_relabel_snapshot(engine):
     """A micro-batch whose MERGE commits nothing must neither restamp the
     previous snapshot's batch id nor write a new metadata version."""
-    from iceberg_demo_spark.streaming.pipeline import _stamp_batch
+    from iceberg_demo_spark.streaming.pipeline import _batch_summary
 
     t = engine.catalog.create_table("db.upsert", "k bigint, v bigint")
-    snap = t.append(engine.spark.createDataFrame(
-        [(1, 10)], "k bigint, v bigint"))
-    _stamp_batch(t, snap, 0)
+    t.append(engine.spark.createDataFrame([(1, 10)], "k bigint, v bigint"),
+             summary=_batch_summary(0))
     assert t.metadata.snapshots[-1].summary["streaming-batch-id"] == "0"
-    # simulate the no-op batch: merge returned None
-    _stamp_batch(t, None, 1)
+    version = t.metadata.version
+    # the no-op batch: an empty micro-batch matches and inserts nothing
+    empty = engine.spark.createDataFrame([], "k bigint, v bigint")
+    snap = t.merge(empty, on="t.k = s.k",
+                   matched=[{"action": "update", "condition": "s.v > t.v",
+                             "set": {"v": "s.v"}}],
+                   not_matched=[{"values": None}],
+                   summary=_batch_summary(1))
+    assert snap is None
     assert t.metadata.snapshots[-1].summary["streaming-batch-id"] == "0"
+    assert t.metadata.version == version
 
 
 def test_scratch_dir_is_private_and_verified(tmp_path, monkeypatch):

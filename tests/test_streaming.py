@@ -269,11 +269,19 @@ def test_stream_upsert_cdc_last_write_wins_and_idempotent(
         [(f.name, f.dataType.simpleString(), f.nullable)
          for f in schema.fields])
     ckpt = str(tmp_path / "cdc_ckpt")
+    version0 = t.metadata.version
     stream_upsert_to_table(spark, events_dir, schema, t, ckpt,
                            key_cols=["user_id"],
                            order_cols=["ts", "event_id"],
                            max_files_per_trigger=1)
     t.refresh()
+    # every batch commits one MERGE snapshot stamped with its batch id
+    # inside the commit: one metadata version per committing batch
+    merges = t.metadata.snapshots
+    assert merges
+    assert all("streaming-batch-id" in s.summary for s in merges)
+    assert len({s.summary["streaming-batch-id"] for s in merges}) == len(merges)
+    assert t.metadata.version - version0 == len(merges)
     src = spark.read.parquet(events_dir)
     from pyspark.sql import Window
 
@@ -294,6 +302,7 @@ def test_stream_upsert_cdc_last_write_wins_and_idempotent(
     t.refresh()
     assert {tuple(r) for r in t.scan().select(*src.columns).collect()} == exp
     assert len(t.metadata.snapshots) == n_snaps
+    assert t.metadata.version - version0 == n_snaps
 
 
 def test_stream_stream_join_matches_batch_and_restarts_clean(

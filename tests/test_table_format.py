@@ -223,6 +223,45 @@ def test_schema_evolution_add_rename_widen_drop(catalog, spark):
     assert t.scan(snapshot_id=first).columns == ["id", "data"]
 
 
+def test_rename_carries_references_and_drop_refuses_referenced(catalog, spark):
+    """A rename reaches the partition spec sources, the write order and the
+    identifier fields, so later writes and partition pruning see the new
+    name; dropping a referenced column is refused (Iceberg's rule) and
+    leaves the table writable."""
+    ddl = "id bigint not null, cat string, v bigint"
+    t = catalog.create_table("db.refs", ddl, partition_by=[("cat", "identity")])
+    t.set_write_order([{"col": "id"}])
+    t.set_identifier_fields("id")
+    t.append(spark.createDataFrame([(1, "a", 10), (2, "b", 20)], ddl))
+
+    t.rename_column("cat", "kind")
+    t.append(spark.createDataFrame([(3, "a", 30)], "id bigint, kind string, v bigint"))
+    assert sorted(tuple(r) for r in t.scan().collect()) == [
+        (1, "a", 10), (2, "b", 20), (3, "a", 30)]
+    parts, _stats = t._prune_cons("kind = 'a'")
+    assert set(parts) == {"_p_cat"}  # the partition field keeps its name
+    kept = t._pruned_snapshot_files(t.metadata.current_snapshot(), "kind = 'a'")
+    assert len(kept) == 2 and all(f.partition == {"_p_cat": "a"} for f in kept)
+    assert {r["id"] for r in t.scan(where="kind = 'a'").collect()} == {1, 3}
+
+    t.rename_column("id", "key")
+    assert t.metadata.sort_order[0]["col"] == "key"
+    assert t.identifier_fields == ["key"]
+    t.append(spark.createDataFrame([(4, "b", 40)], "key bigint, kind string, v bigint"))
+    assert sorted(tuple(r) for r in t.scan().collect()) == [
+        (1, "a", 10), (2, "b", 20), (3, "a", 30), (4, "b", 40)]
+
+    version = t.metadata.version
+    for col in ("kind", "key"):
+        with pytest.raises(ValueError, match="cannot drop column"):
+            t.drop_column(col)
+    assert t.metadata.version == version
+    t.append(spark.createDataFrame([(5, "b", 50)], "key bigint, kind string, v bigint"))
+    assert t.scan().count() == 5
+    t.drop_column("v")
+    assert t.scan().columns == ["key", "kind"]
+
+
 def test_nested_struct_field_add_drop(catalog, spark):
     t = catalog.create_table("db.nested", "id int, point struct<x:int,y:int>")
     t.append(spark.createDataFrame([Row(id=1, point=Row(x=1, y=2))]))
